@@ -113,7 +113,7 @@ object Bench {
         val tname = f.getName.stripSuffix(".parquet")
         // fact tables get one file per bench core cohort; dims stay few
         val parts = if (Set("lineitem", "orders", "events").contains(tname)) 16 else 4
-        spark.read.parquet(f.getPath).repartition(parts)
+        graft.sources.Sources.readParquet(spark, f.getPath).repartition(parts)
           .write.mode("overwrite").parquet(s"${cache.getPath}/$tname.parquet")
       }
       java.nio.file.Files.write(ok.toPath, fingerprint.getBytes("UTF-8"))
@@ -202,7 +202,7 @@ object Bench {
     val shiftCols = Set("l_orderkey", "o_orderkey", "o_custkey", "c_custkey",
       "doc_id", "p_partkey", "event_id", "user_id", "vec_id")
     def replicate(tname: String, parts: Int): Unit = {
-      val src = spark.read.parquet(s"$benchDir/$tname.parquet")
+      val src = graft.sources.Sources.readParquet(spark, s"$benchDir/$tname.parquet")
       val replicas = (0 until 10).map { i =>
         val shifted = src.columns.foldLeft(src) { (d, c) =>
           if (shiftCols.contains(c)) d.withColumn(c, col(c) + lit(i * K)) else d
@@ -242,7 +242,7 @@ object Bench {
     replicate("events", 16)
     replicate("embeddings", 4)
     Seq("nation", "region").foreach { tname =>
-      spark.read.parquet(s"$benchDir/$tname.parquet")
+      graft.sources.Sources.readParquet(spark, s"$benchDir/$tname.parquet")
         .write.mode("overwrite").parquet(s"${cache.getPath}/$tname.parquet")
     }
     java.nio.file.Files.write(ok.toPath, marker.getBytes("UTF-8"))
@@ -305,7 +305,7 @@ object Bench {
     // the query when it was a hole in the synth (r17 verdict item 1).
     // o_orderkey is the only column the sketch reads.
     def buildOrders(): Unit =
-      spark.read.parquet(s"$benchDir/orders.parquet")
+      graft.sources.Sources.readParquet(spark, s"$benchDir/orders.parquet")
         .select("o_orderkey").crossJoin(reps100)
         .select((col("o_orderkey") + col("__r") * K).as("o_orderkey"))
         .repartition(16)
@@ -318,7 +318,7 @@ object Bench {
       return cache.getPath
     }
     val reps = reps100
-    spark.read.parquet(s"$benchDir/documents.parquet")
+    graft.sources.Sources.readParquet(spark, s"$benchDir/documents.parquet")
       .select("doc_id", "text").crossJoin(reps)
       .select((col("doc_id") + col("__r") * K).as("doc_id"),
         when(col("__r") === 0, col("text")).otherwise(
@@ -326,7 +326,7 @@ object Bench {
             concat(lit("r"), col("__r"), lit(" ")))).as("text"))
       .repartition(128)
       .write.mode("overwrite").parquet(s"${cache.getPath}/documents.parquet")
-    spark.read.parquet(s"$benchDir/lineitem.parquet")
+    graft.sources.Sources.readParquet(spark, s"$benchDir/lineitem.parquet")
       .select("l_orderkey", "l_extendedprice").crossJoin(reps)
       .select((col("l_orderkey") + col("__r") * K).as("l_orderkey"),
         col("l_extendedprice"))
@@ -336,7 +336,7 @@ object Bench {
     // perturbation (two digits of the replica number, doubled -> any
     // two distinct prefixes are >= 2 edits apart, zero cross-replica
     // pairs at maxDist=1)
-    spark.read.parquet(s"$benchDir/customer.parquet")
+    graft.sources.Sources.readParquet(spark, s"$benchDir/customer.parquet")
       .select("c_custkey", "c_name").crossJoin(reps)
       .select((col("c_custkey") + col("__r") * K).as("c_custkey"),
         when(col("__r") === 0, col("c_name")).otherwise(concat(
@@ -350,7 +350,7 @@ object Bench {
     // would pile 100 deep into the SAME coarse lists (one giant cell
     // = no directory pruning to measure), where isotropic jitter
     // spreads them like fresh content; deterministic, no RNG
-    spark.read.parquet(s"$benchDir/embeddings.parquet")
+    graft.sources.Sources.readParquet(spark, s"$benchDir/embeddings.parquet")
       .select("vec_id", "embedding").crossJoin(reps)
       .select((col("vec_id") + col("__r") * K).as("vec_id"),
         when(col("__r") === 0, col("embedding")).otherwise(
@@ -365,7 +365,7 @@ object Bench {
     // keep ts/type verbatim — per-user span density stays constant, so
     // the overlap-join's pair output scales exactly linearly and the
     // window profiles just grow their counts
-    spark.read.parquet(s"$benchDir/events.parquet").crossJoin(reps)
+    graft.sources.Sources.readParquet(spark, s"$benchDir/events.parquet").crossJoin(reps)
       .select((col("event_id") + col("__r") * K).as("event_id"),
         col("ts"), (col("user_id") + col("__r") * K).as("user_id"),
         col("event_type"), col("value"), col("props"))
@@ -564,7 +564,7 @@ object Bench {
     // absorb session/codegen/parquet-footer warmup so per-query times
     // measure the queries, not JVM startup
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$benchDir/region.parquet").count()
+    graft.sources.Sources.readParquet(spark, s"$benchDir/region.parquet").count()
     // host-speed anchor: a fixed shuffle+agg over synthetic data, timed
     // at the start and end of the bench window. Query times only
     // compare across rounds when the host was comparably idle — r9's
@@ -617,6 +617,10 @@ object Bench {
       // already taken.
       try {
         graft.functions.ScanFns.unpersistScans()
+        // each timed run resolves parquet schemas and IVF-PQ sidecars
+        // itself, like the first one did
+        graft.sources.Sources.clearSchemaCache()
+        graft.ops.Similarity.clearIndexCache()
         // drop any remaining cached relations + broadcast/GC residue:
         // r10's judge measured x_bitext 17x slower WITHIN the 37-query
         // bench than standalone with an unchanged plan — late-bench

@@ -79,6 +79,10 @@ object Probe {
         SparkEntry.queries(n)(spark, dir).count()
         val t = (System.nanoTime() - t0) / 1e9
         graft.functions.ScanFns.unpersistScans()
+        // cached parquet schemas and IVF-PQ sidecars would make every
+        // run after the first skip work the first one paid for
+        graft.sources.Sources.clearSchemaCache()
+        graft.ops.Similarity.clearIndexCache()
         // same per-run hygiene as Bench.time1: operators that persist
         // within-query frames (e.g. dedupClusters' partitioned edge
         // cache) must not leak a warm cache into the next timed run

@@ -15,7 +15,7 @@ import graft.functions.Exact._
   */
 object QueriesBase {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(s, s"$dir/$name.parquet")
 
   type Q = (SparkSession, String) => DataFrame
 

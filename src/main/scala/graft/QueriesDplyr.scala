@@ -10,7 +10,7 @@ import graft.functions.Exact._
 /** dplyr-verb coverage queries (SURVEY §2.1), one per operator. */
 object QueriesDplyr {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(s, s"$dir/$name.parquet")
 
   type Q = (SparkSession, String) => DataFrame
 

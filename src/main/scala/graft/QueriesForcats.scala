@@ -8,7 +8,7 @@ import graft.functions.Exact._
 /** forcats coverage queries (SURVEY §2.3). */
 object QueriesForcats {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(s, s"$dir/$name.parquet")
 
   type Q = (SparkSession, String) => DataFrame
 

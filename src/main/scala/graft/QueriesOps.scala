@@ -8,7 +8,7 @@ import graft.streaming.EventStreams
 /** LLM-pipeline + streaming coverage queries (SURVEY §2.6, §2.7). */
 object QueriesOps {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(s, s"$dir/$name.parquet")
 
   /** Content tag for the per-session on-disk LAYOUT caches
     * (x_part_prune / x_zorder_prune / x_bucket_join / x_filebloom):
@@ -2093,7 +2093,7 @@ object QueriesOps {
           t(s, d, "documents").select("doc_id", "lang", "n_chars"),
           path, Seq("lang"))
       }
-      s.read.parquet(path)
+      graft.sources.Sources.readParquet(s, path)
         .filter(col("lang").isin("en", "de"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -2412,7 +2412,7 @@ object QueriesOps {
           t(s, d, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
           path, Seq("o_custkey", "o_orderkey"), bits = 8, numFiles = 16)
       }
-      s.read.parquet(path)
+      graft.sources.Sources.readParquet(s, path)
         .filter(col("o_custkey").between(100, 300) &&
           col("o_orderkey").between(1000, 4000))
         .agg(count(lit(1)).as("n"),
@@ -2433,7 +2433,7 @@ object QueriesOps {
           t(s, d, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
           path, Seq("o_custkey", "o_orderkey"), bits = 8, numFiles = 16)
       }
-      s.read.parquet(path)
+      graft.sources.Sources.readParquet(s, path)
         .filter(col("o_custkey").between(100, 300) &&
           col("o_orderkey").between(1000, 4000))
         .agg(count(lit(1)).as("n"),
@@ -2466,7 +2466,7 @@ object QueriesOps {
         graft.functions.ZOrder.zorderAppend(
           o.filter(col("o_orderkey") % 4 === 0), path, numFiles = 4)
       }
-      s.read.parquet(path)
+      graft.sources.Sources.readParquet(s, path)
         .filter(col("o_custkey").between(100, 300) &&
           col("o_orderkey").between(1000, 4000))
         .agg(count(lit(1)).as("n"),
@@ -4260,7 +4260,7 @@ object QueriesOps {
     val Array(nd, tl) =
       new String(java.nio.file.Files.readAllBytes(ok.toPath), "UTF-8")
         .split(":").map(_.toLong)
-    (s.read.parquet(s"${cache.getPath}/postings.parquet"), (nd, tl))
+    (graft.sources.Sources.readParquet(s, s"${cache.getPath}/postings.parquet"), (nd, tl))
   }
 
   /** Build-or-reuse the materialized MinHash dedup index for `dir`
@@ -4287,8 +4287,8 @@ object QueriesOps {
       sh.write.mode("overwrite").parquet(s"${cache.getPath}/shingles.parquet")
       java.nio.file.Files.write(ok.toPath, "ok".getBytes("UTF-8"))
     }
-    (s.read.parquet(s"${cache.getPath}/bands.parquet"),
-      s.read.parquet(s"${cache.getPath}/shingles.parquet"))
+    (graft.sources.Sources.readParquet(s, s"${cache.getPath}/bands.parquet"),
+      graft.sources.Sources.readParquet(s, s"${cache.getPath}/shingles.parquet"))
   }
 
   /** Shared oracle fragment: the Dedup.tokens normalization in DuckDB. */

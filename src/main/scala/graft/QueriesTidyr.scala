@@ -9,7 +9,7 @@ import graft.functions.CondFns
 /** tidyr + tibble coverage queries (SURVEY §2.2, §2.5). */
 object QueriesTidyr {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(s, s"$dir/$name.parquet")
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -16,7 +16,7 @@ object SparkEntry {
 
   // ---- table access ------------------------------------------------------
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(s, s"$dir/$name.parquet")
 
   private def li(s: SparkSession, d: String) = t(s, d, "lineitem")
   private def ord(s: SparkSession, d: String) = t(s, d, "orders")

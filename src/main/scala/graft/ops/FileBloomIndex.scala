@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.plans.{BloomBuildAgg, BloomBytesContainExpr, BloomKernels}
+import graft.sources.Sources
 
 /** Per-FILE Bloom sidecar for point lookups on a high-cardinality key
   * — the file-level complement of parquet's native row-group bloom
@@ -47,7 +48,7 @@ object FileBloomIndex {
     val agg = ColumnBridge.column(
       BloomBuildAgg(ColumnBridge.expr(xxhash64(key)), numBits, numHashes)
         .toAggregateExpression())
-    spark.read.parquet(dataPath)
+    Sources.readParquet(spark, dataPath)
       .withColumn("__file", input_file_name())
       .groupBy(col("__file").as("file"))
       .agg(count(lit(1)).as("n_rows"), agg.as("bloom"))
@@ -71,12 +72,13 @@ object FileBloomIndex {
   final val MaxProbeBatch = 1024
 
   /** Spark-compatible xxhash64 of the probe values AS THE KEY COLUMN'S
-    * TYPE, in ONE local 1-row projection (no per-key jobs, no hash
-    * reimplementation to drift). xxhash64 is type-sensitive — an Int
-    * literal probing a LongType key hashes differently and would prune
-    * every file even though the row exists — so each literal is cast
-    * to `keyType` first, and a probe the cast nulls out fails loudly
-    * instead of silently matching nothing. */
+    * TYPE, projected over a one-row local relation: Catalyst folds the
+    * casts and hashes on the driver, so a lookup launches no job and
+    * no hash is reimplemented to drift. xxhash64 is type-sensitive — an
+    * Int literal probing a LongType key hashes differently and would
+    * prune every file even though the row exists — so each literal is
+    * cast to `keyType` first, and a probe the cast nulls out fails
+    * loudly instead of silently matching nothing. */
   def hashAll(spark: SparkSession, values: Seq[Any],
               keyType: org.apache.spark.sql.types.DataType): Seq[Long] = {
     require(values.nonEmpty, "FileBloomIndex.hashAll: empty probe batch")
@@ -89,7 +91,7 @@ object FileBloomIndex {
     // probe; the nulled-flag check below turns that into one
     // descriptive failure regardless of the session's ansi setting
     val casts = values.map(v => lit(v).try_cast(keyType))
-    val row = spark.range(1)
+    val row = oneRow(spark)
       .select(array(casts.map(c => xxhash64(c)): _*).as("h"),
               array(casts.map(_.isNull): _*).as("nulled"))
       .head()
@@ -107,7 +109,13 @@ object FileBloomIndex {
     * prefer [[hashAll]] with the key type read from the data schema —
     * that's what [[lookup]]/[[lookupMany]] do. */
   def hashOf(spark: SparkSession, value: Any): Long =
-    spark.range(1).select(xxhash64(lit(value))).head().getLong(0)
+    oneRow(spark).select(xxhash64(lit(value))).head().getLong(0)
+
+  /** A one-row, zero-column local relation: a projection of literals
+    * over it folds to a local result that collects without a job. */
+  private def oneRow(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row()),
+      new org.apache.spark.sql.types.StructType())
 
   /** The sidecar rows whose bloom might contain ANY of the probe
     * hashes, projected to the file PATH only — the probe runs in
@@ -148,7 +156,7 @@ object FileBloomIndex {
     * surviving files with the IN filter pushed down. */
   def lookupMany(spark: SparkSession, dataPath: String, sidecar: DataFrame,
                  key: Column, values: Seq[Any]): DataFrame = {
-    val all = spark.read.parquet(dataPath)
+    val all = Sources.readParquet(spark, dataPath)
     val keyType = all.select(key).schema.head.dataType
     val hashes = hashAll(spark, values, keyType)
     val files = candidateFilesDF(sidecar, hashes).collect().map(_.getString(0)).toSeq

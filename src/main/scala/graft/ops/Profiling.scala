@@ -528,7 +528,7 @@ object Profiling {
 
   def readTableStats(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame =
-    spark.read.parquet(s"$path/_table_stats")
+    graft.sources.Sources.readParquet(spark, s"$path/_table_stats")
 
   // ---- KMV distinct / overlap sketch ---------------------------------------
 

@@ -56,33 +56,48 @@ object Retrieval {
     * re-evaluates the same frame lazily — a non-deterministic
     * `queries` input (sample()/limit() without an order) could prune
     * terms the scoring join later expects and silently zero their
-    * contributions. The queries frame must be deterministic (every
-    * registry caller reads a parquet frame or a literal). */
-  private def termFilter(qterms: DataFrame, termCol: Column): Column = {
+    * contributions. The scan paths therefore need a deterministic
+    * queries frame; the indexed paths evaluate it once
+    * ([[collectedQueryTerms]]). */
+  private def pruneByTerms(df: DataFrame, qterms: DataFrame,
+                           termCol: Column): DataFrame =
     // probe one past the cap so an over-cap workload is detected
     // without collecting it in full
-    val terms = qterms.select("term").distinct().limit(TermInlineCap + 1)
-      .collect().map(_.getString(0)).filter(_ != null).sorted.toSeq
-    if (terms.isEmpty) lit(false)
-    else if (terms.size <= TermInlineCap) termCol.isin(terms: _*)
-    else null // caller falls back to the broadcast semi-join
-  }
+    pruneByTermSet(df, qterms.select("term").distinct()
+      .limit(TermInlineCap + 1).collect().map(_.getString(0)).toSeq,
+      qterms, termCol)
 
   /** Prune a postings-shaped frame to the query terms: a literal In()
     * when the distinct term set is small (≤ [[TermInlineCap]] — it
     * reaches a parquet scan as a PushedFilter and row-group
     * min/max-prunes a term-clustered index; see [[bm25TopKIndexed]]),
-    * falling back to the broadcast semi-join for term sets big enough
-    * that inlining them would bloat the plan (the thousands-of-queries
-    * contract: the semi-join keeps the plan O(1)-sized). */
-  private def pruneByTerms(df: DataFrame, qterms: DataFrame,
-                           termCol: Column): DataFrame =
-    termFilter(qterms, termCol) match {
-      case null =>
-        df.join(broadcast(qterms.select("term").distinct()),
-          Seq("term"), "leftsemi")
-      case f => df.filter(f)
-    }
+    * falling back to the broadcast semi-join against `qterms` for term
+    * sets big enough that inlining them would bloat the plan (the
+    * thousands-of-queries contract: the semi-join keeps the plan
+    * O(1)-sized). */
+  private def pruneByTermSet(df: DataFrame, terms: Seq[String],
+                             qterms: DataFrame, termCol: Column): DataFrame = {
+    val ts = terms.filter(_ != null).distinct.sorted
+    if (ts.isEmpty) df.filter(lit(false))
+    else if (ts.size <= TermInlineCap) df.filter(termCol.isin(ts: _*))
+    else df.join(broadcast(qterms.select("term").distinct()),
+      Seq("term"), "leftsemi")
+  }
+
+  /** The query frame's distinct (qid, term) rows, evaluated ONCE and
+    * replayed as a local frame: the term prune and the scoring join
+    * then read the same rows, even when `queries` is
+    * non-deterministic (sample()/limit() without an order), and the
+    * prune's term set comes from those rows with no second job.
+    * Queries are driver-sized by contract. Returns (rows frame, terms). */
+  private def collectedQueryTerms(queries: DataFrame, qid: String,
+                                  qtext: String): (DataFrame, Seq[String]) = {
+    val qterms = queries.select(col(qid),
+      explode(array_distinct(toks(col(qtext)))).as("term"))
+    val rows = qterms.collect()
+    (queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      qterms.schema), rows.map(_.getString(1)).toSeq)
+  }
 
   /** Tokenize the corpus ONCE PER ROW: project the token array as a
     * real column first, then take size + explode from that column.
@@ -112,7 +127,7 @@ object Retrieval {
     *                    query CORPUS is a different operator) and
     *                    DETERMINISTIC (its term set is evaluated once
     *                    eagerly for scan pruning and again lazily for
-    *                    scoring — see [[termFilter]])
+    *                    scoring — see [[pruneByTerms]])
     * @param corpusStats precomputed (docCount, totalTokens) — skips
     *                    the stats scan; token counts must come from
     *                    the same tokenizer ([[Dedup.tokens]], empties
@@ -314,13 +329,19 @@ object Retrieval {
     require(k >= 1, s"bm25TopKIndexed: k must be >= 1 (got $k)")
     require(k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
-    val qterms = queries.select(col(qid),
-      explode(array_distinct(toks(col(qtext)))).as("term"))
+    val (qterms, terms) = collectedQueryTerms(queries, qid, qtext)
+    indexedTopK(index, stats, id, qterms, terms, qid, k, k1, b)
+  }
+
+  /** [[bm25TopKIndexed]] over already-collected query terms. */
+  private def indexedTopK(index: DataFrame, stats: (Long, Long), id: String,
+                          qterms: DataFrame, terms: Seq[String], qid: String,
+                          k: Int, k1: Double, b: Double): DataFrame = {
     // literal In() so the term pruning reaches the postings parquet
     // scan as a PushedFilter — with the index term-clustered on write,
     // row-group min/max stats skip every non-matching group, where the
     // old broadcast semi-join decoded the full postings file per call
-    val tf = pruneByTerms(index, qterms, col("term"))
+    val tf = pruneByTermSet(index, terms, qterms, col("term"))
     val statsDf = index.sparkSession.range(1)
       .select(lit(stats._1).as("nd"), lit(stats._2).as("tl"))
     scoreAndCut(tf, statsDf, id, qterms, qid, k, k1, b)
@@ -361,10 +382,10 @@ object Retrieval {
       val probe = df.limit(prfCap + 1).collect()
       if (probe.length <= prfCap) Some(probe) else None
     }
-    val qterms = queries.select(col(qid),
-      explode(array_distinct(toks(col(qtext)))).as("term"))
-    val first = bm25TopKIndexed(index, stats, id, queries, qid, qtext,
-      fbDocs, k1, b)
+    require(k1 > 0 && b >= 0 && b <= 1,
+      s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
+    val (qterms, terms) = collectedQueryTerms(queries, qid, qtext)
+    val first = indexedTopK(index, stats, id, qterms, terms, qid, fbDocs, k1, b)
     // The feedback-doc list is (queries × fbDocs)-sized: collect it
     // once and replay it as a LITERAL frame. Lazily, `expanded` fed
     // BOTH the pass-2 term set and the scoring join — two independent

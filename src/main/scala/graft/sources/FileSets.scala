@@ -1,0 +1,58 @@
+package graft.sources
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+
+/** Identity of a file set for driver-side caches of state derived
+  * from files (a parquet schema, an index's centroids): every leaf
+  * file a read of the roots would see, with its length and
+  * modification time. Spark writers name every new file uniquely, so
+  * an overwrite, an append or a compaction changes the identity and
+  * the derived state is built again; an unchanged file set keeps it.
+  */
+private[graft] object FileSets {
+
+  /** (path, length, mtime) of every visible leaf file under `roots`,
+    * roots in the given order and each directory in name order. Hidden
+    * names follow Spark's file-index rule (`_x` and `.x` are skipped,
+    * `k=v` partition directories and parquet summary files are not).
+    * None when a root is missing or cannot be listed: the caller then
+    * leaves the read to Spark, which raises its usual error. */
+  def fingerprint(conf: Configuration,
+                  roots: Seq[String]): Option[Vector[(String, Long, Long)]] =
+    scala.util.Try {
+      val out = Vector.newBuilder[(String, Long, Long)]
+      def walk(st: FileStatus): Unit =
+        if (st.isDirectory)
+          st.getPath.getFileSystem(conf).listStatus(st.getPath)
+            .filterNot(s => hidden(s.getPath.getName))
+            .sortBy(_.getPath.getName).foreach(walk)
+        else out += ((st.getPath.toString, st.getLen, st.getModificationTime))
+      val matched = roots.map { r =>
+        val p = new Path(r)
+        val fs = p.getFileSystem(conf)
+        if (isGlob(r)) Option(fs.globStatus(p)).getOrElse(Array.empty)
+        else Array(fs.getFileStatus(p))
+      }
+      if (matched.exists(_.isEmpty)) None
+      else { matched.foreach(_.foreach(walk)); Some(out.result()) }
+    }.toOption.flatten
+
+  def isGlob(path: String): Boolean = path.exists("{}[]*?\\".contains(_))
+
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  /** A bounded least-recently-used map, safe to share across threads. */
+  final class Lru[K, V](bound: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > bound
+    }
+    def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
+    def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
+    def clear(): Unit = m.synchronized(m.clear())
+  }
+}

@@ -24,18 +24,113 @@ import org.apache.spark.sql.types.StructType
   *   Exchange at all (asserted in SourcesSpec).
   * - `maxRecordsPerFile` caps output file size so a skewed final task
   *   cannot emit a multi-GB file that breaks downstream split sizing.
+  * - [[readParquet]] is graft's only parquet entry point. Spark infers
+  *   a parquet schema with a job that opens footers on every read; on
+  *   a serving path that job costs more than the answer. The inferred
+  *   schema is kept in a driver-side cache of at most
+  *   [[SchemaCacheEntries]] schemas (least recently used goes first),
+  *   keyed by the roots as given, every leaf file's path, size and
+  *   mtime ([[FileSets.fingerprint]], a driver listing with no job) and
+  *   the session confs inference reads ([[InferenceConfs]]). A repeat
+  *   read of an unchanged file set passes the cached schema to
+  *   `spark.read.schema(...)` and runs no inference. Inference runs
+  *   again when the file set changes (an overwrite, an append, a
+  *   compaction: Spark names every new file uniquely), when one of
+  *   those confs changes, after [[clearSchemaCache]], or once the entry
+  *   has been evicted. A root that does not exist is never cached: the
+  *   read goes straight to Spark and fails as it always did. When the
+  *   roots are plain data files (a manifested table's file list), a
+  *   miss reads the first file's footer on the driver instead of
+  *   running the inference job ([[filesSchema]]), so even the first
+  *   read of a newly published file set launches no extra job.
   */
 object Sources {
 
   // ---- readers -----------------------------------------------------------
+  /** Most parquet schemas the driver keeps; one entry is a file-set
+    * fingerprint plus a schema. */
+  val SchemaCacheEntries = 512
+
+  /** Session confs parquet schema inference and partition discovery
+    * read: part of the schema cache key. */
+  private val InferenceConfs = Seq(
+    "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.session.timeZone",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  private final case class SchemaKey(roots: Seq[String], merged: Boolean,
+                                     confs: Seq[Option[String]],
+                                     files: Vector[(String, Long, Long)])
+
+  private val schemas = new FileSets.Lru[SchemaKey, StructType](SchemaCacheEntries)
+
+  /** Drop every cached parquet schema (benchmarks call this between
+    * timed runs, next to `ScanFns.unpersistScans()`). */
+  def clearSchemaCache(): Unit = schemas.clear()
+
+  /** Read parquet, inferring the schema once per file set (see the
+    * object scaladoc for the cache key and when inference runs again). */
   def readParquet(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.parquet(paths: _*)
+    readParquetCached(spark, paths, merged = false)
 
   /** Parquet with schema evolution across files (mergeSchema scans all
     * footers — bounded metadata cost, pay it only when files really
-    * have heterogeneous schemas). */
+    * have heterogeneous schemas). Cached like [[readParquet]]. */
   def readParquetMerged(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    readParquetCached(spark, paths, merged = true)
+
+  private def readParquetCached(spark: SparkSession, paths: Seq[String],
+                                merged: Boolean): DataFrame = {
+    def inferred =
+      (if (merged) spark.read.option("mergeSchema", "true") else spark.read)
+        .parquet(paths: _*)
+    FileSets.fingerprint(spark.sessionState.newHadoopConf(), paths) match {
+      case None => inferred
+      case Some(files) =>
+        val key = SchemaKey(paths, merged,
+          InferenceConfs.map(spark.conf.getOption), files)
+        schemas.get(key).orElse(if (merged) None else filesSchema(spark, paths)) match {
+          case Some(schema) =>
+            schemas.put(key, schema)
+            spark.read.schema(schema).parquet(paths: _*)
+          case None =>
+            val df = inferred
+            schemas.put(key, df.schema)
+            df
+        }
+    }
+  }
+
+  /** A non-merged read whose roots are all plain data files (a
+    * manifested table's file list) has no partition columns, and
+    * Spark infers its schema from the FIRST file's footer alone; read
+    * that footer on the driver, with no job. None for directories,
+    * globs, summary files and unreadable footers: those go to Spark's
+    * inference job. */
+  private def filesSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sessionState.newHadoopConf()
+    scala.util.Try {
+      val sts = paths.map { p =>
+        val path = new Path(p)
+        path.getFileSystem(conf).getFileStatus(path)
+      }
+      val plain = !paths.exists(FileSets.isGlob) && sts.forall { st =>
+        val name = st.getPath.getName
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+      if (plain && sts.nonEmpty)
+        Some(org.apache.spark.sql.graftbridge.ParquetBridge.footerSchema(spark, sts.head))
+      else None
+    }.toOption.flatten
+  }
 
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               header: Boolean = true, delimiter: String = ",",
@@ -259,7 +354,7 @@ object Sources {
     if (cur.nonEmpty) bins += cur
     val toRewrite = bins.filter(_.size >= 2) // singleton bins gain nothing
     toRewrite.foreach { bin =>
-      spark.read.parquet(bin.map(_.toString): _*)
+      readParquet(spark, bin.map(_.toString): _*)
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(path)
       bin.foreach(p => fs.delete(p, false))
@@ -583,7 +678,7 @@ object Sources {
       case Some(names) =>
         require(names.nonEmpty, s"readManifested: $path manifest is empty")
         readFilesApplyingDefaults(spark, path, names)
-      case None => spark.read.parquet(path)
+      case None => readParquet(spark, path)
     }
   }
 
@@ -643,7 +738,7 @@ object Sources {
                                 names: Seq[String],
                                 sm: SchemaMeta): DataFrame = {
     if (sm.isEmpty)
-      spark.read.parquet(names.map(n => s"$path/$n"): _*)
+      readParquet(spark, names.map(n => s"$path/$n"): _*)
     else {
       val conf = spark.sessionState.newHadoopConf()
       val groups = names.groupBy { n =>
@@ -656,8 +751,7 @@ object Sources {
         (drops, renames, missing)
       }
       groups.map { case ((drops, renames, missing), files) =>
-        val df = spark.read.option("mergeSchema", "true")
-          .parquet(files.map(n => s"$path/$n"): _*)
+        val df = readParquetMerged(spark, files.map(n => s"$path/$n"): _*)
         val dropped = drops.foldLeft(df)(_.drop(_))
         val renamed = renames.foldLeft(dropped) { case (d, (o, n)) =>
           d.withColumnRenamed(o, n)

@@ -34,7 +34,7 @@ object EventStreams {
     * schema (for tests: format("memory") sink + processAllAvailable).
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = graft.sources.Sources.readParquet(spark, dir).schema
     spark.readStream.schema(schema).parquet(dir)
   }
 

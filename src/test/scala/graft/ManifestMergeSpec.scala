@@ -279,27 +279,8 @@ class ManifestMergeSpec extends SparkTestBase {
     assert(Sources.readManifest(conf, path).get.length == 120)
     val delta = (0L until 1200L by 3L)
       .map(i => (i, -i, "upsert")).toDF("id", "v", "op")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val res =
-      try Sources.mergeAtomic(spark, path, delta, "id")
-      finally {
-        // listener events are async — drain before reading the count
-        Thread.sleep(100)
-        var prev = -1
-        var stable = 0
-        while (stable < 3 && prev <= jobs.get()) {
-          if (jobs.get() == prev) stable += 1 else stable = 0
-          prev = jobs.get(); Thread.sleep(150)
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    var res: Sources.MergeResult = null
+    val jobs = jobsDuring { res = Sources.mergeAtomic(spark, path, delta, "id") }
     assert(res.updated == 400L && res.deleted == 0L && res.inserted == 0L)
     assert(res.rewritten.length >= 100,
       s"the spread delta must touch 100+ files: ${res.rewritten.length}")
@@ -307,8 +288,8 @@ class ManifestMergeSpec extends SparkTestBase {
     // write regardless of how many files the delta touches — a
     // per-file loop would launch 100+ jobs here and serialize a wide
     // delta through the driver at 100 TB
-    assert(jobs.get() <= 12,
-      s"mergeAtomic must rewrite in O(1) jobs, saw ${jobs.get()}")
+    assert(jobs <= 12,
+      s"mergeAtomic must rewrite in O(1) jobs, saw $jobs")
     // answers unchanged by the one-job shape
     val got = Sources.readManifested(spark, path)
     assert(got.count() == 1200)
@@ -320,29 +301,15 @@ class ManifestMergeSpec extends SparkTestBase {
     assert(Sources.readManifest(conf, path).get.length == 120)
     // DELETE and UPDATE share the one-job rewrite: a predicate
     // touching all 120 files must also stay O(1) jobs
-    val jobs2 = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l2 = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs2.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l2)
-    val (updNames, nUpd) =
-      try Sources.updateWhereAtomic(spark, path, col("id") % 5L === 1L,
+    var upd: (Seq[String], Long) = null
+    val jobs2 = jobsDuring {
+      upd = Sources.updateWhereAtomic(spark, path, col("id") % 5L === 1L,
         Map("v" -> (col("v") + 1L)))
-      finally {
-        Thread.sleep(100)
-        var prev = -1; var stable = 0
-        while (stable < 3 && prev <= jobs2.get()) {
-          if (jobs2.get() == prev) stable += 1 else stable = 0
-          prev = jobs2.get(); Thread.sleep(150)
-        }
-        spark.sparkContext.removeSparkListener(l2)
-      }
+    }
+    val (updNames, nUpd) = upd
     assert(nUpd == 240L && updNames.length >= 100)
-    assert(jobs2.get() <= 10,
-      s"updateWhereAtomic must rewrite in O(1) jobs, saw ${jobs2.get()}")
+    assert(jobs2 <= 10,
+      s"updateWhereAtomic must rewrite in O(1) jobs, saw $jobs2")
     val (delNames, nDel) = Sources.deleteWhereAtomic(spark, path,
       col("id") % 5L === 2L)
     assert(nDel == 240L && delNames.length >= 100)

@@ -17,6 +17,26 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   def assertRows(df: DataFrame, expected: Seq[Seq[Any]]): Unit =
     assert(rowsOf(df) == expected)
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously, so the bus is drained before the listener is
+    * added (earlier jobs are not counted) and before it is read. */
+  def jobsDuring(body: => Any): Int = {
+    import org.apache.spark.ListenerBusDrain.drain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally { drain(sc); sc.removeSparkListener(listener) }
+    jobs.get()
+  }
 }
 
 object SparkTestBase {
