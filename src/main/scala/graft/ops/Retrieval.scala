@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
+  LongType, ShortType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Lexical retrieval over a document corpus — the sparse complement to
   * the dense ANN stack in [[Similarity]] (hybrid retrieval runs both
@@ -89,14 +92,18 @@ object Retrieval {
     * then read the same rows, even when `queries` is
     * non-deterministic (sample()/limit() without an order), and the
     * prune's term set comes from those rows with no second job.
-    * Queries are driver-sized by contract. Returns (rows frame, terms). */
+    * Queries are driver-sized by contract. The collect takes one row
+    * per query (its distinct terms) and explodes on the driver, so
+    * over a local query batch the projection folds into the local
+    * relation and no Spark job runs. Returns (rows frame, rows). */
   private def collectedQueryTerms(queries: DataFrame, qid: String,
-                                  qtext: String): (DataFrame, Seq[String]) = {
-    val qterms = queries.select(col(qid),
-      explode(array_distinct(toks(col(qtext)))).as("term"))
-    val rows = qterms.collect()
-    (queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      qterms.schema), rows.map(_.getString(1)).toSeq)
+                                  qtext: String): (DataFrame, Seq[Row]) = {
+    val terms = array_distinct(toks(col(qtext)))
+    val schema = queries.select(col(qid), explode(terms).as("term")).schema
+    val rows = queries.select(col(qid), terms).collect().toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).getOrElse(Nil).map(t => Row(r.get(0), t))
+    }
+    (queries.sparkSession.createDataFrame(rows.asJava, schema), rows)
   }
 
   /** Tokenize the corpus ONCE PER ROW: project the token array as a
@@ -189,21 +196,28 @@ object Retrieval {
     // tokenized once per call, not twice.
     val dfreq = tf.groupBy("term")
       .agg(count(when(col("tf") > 0, 1)).as("dfc"))
-    val avgdl = col("tl").cast("double") / col("nd").cast("double")
-    val idf = log(lit(1.0) +
-      (col("nd").cast("double") - col("dfc") + 0.5) / (col("dfc") + 0.5))
-    val norm = col("tf") + lit(k1) *
-      (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / avgdl)
     val scored = tf
       .join(broadcast(qterms), Seq("term"))
       .join(broadcast(dfreq), Seq("term"))
       .crossJoin(broadcast(stats))
-      .withColumn("__contrib", idf * (col("tf") * (k1 + 1.0)) / norm)
+      .withColumn("__contrib", contribution(col("nd"), col("tl"), k1, b))
       .groupBy(col(qid), col(id))
       .agg(round(sum(col("__contrib").cast("decimal(38,18)")).cast("double"), 6)
         .as("bm25"))
     graft.plans.TopK.topKPerGroup(scored, Seq(qid),
       Seq(col("bm25").desc, col(id).asc), k)
+  }
+
+  /** One posting's BM25 contribution idf·tf-norm, a fixed-order IEEE
+    * chain over the row's `tf`, `dl` and `dfc` and the corpus stats
+    * `nd` (documents) and `tl` (tokens). */
+  private def contribution(nd: Column, tl: Column, k1: Double, b: Double): Column = {
+    val avgdl = tl.cast("double") / nd.cast("double")
+    val idf = log(lit(1.0) +
+      (nd.cast("double") - col("dfc") + 0.5) / (col("dfc") + 0.5))
+    val norm = col("tf") + lit(k1) *
+      (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / avgdl)
+    idf * (col("tf") * (k1 + 1.0)) / norm
   }
 
   /** The standing-workload index [[bm25TopK]]'s scaladoc promises: the
@@ -317,34 +331,134 @@ object Retrieval {
   }
 
   /** BM25 top-k against a MATERIALIZED [[invertedIndex]] — the
-    * standing-workload path: zero corpus scans per call. The pruning
-    * broadcast semi-join runs map-side against the postings scan, so
-    * both consumers of the pruned subtree (scoring + df) re-scan only
-    * the index, whose (id, dl, term, tf) rows are a fraction of the
-    * raw text bytes and never re-tokenize. Scores are bit-identical
-    * to [[bm25TopK]] (same tokenizer contract, same scoring tail). */
+    * standing-workload path: zero corpus scans per call. The term
+    * prune reaches the postings scan, whose (id, dl, term, tf) rows
+    * are a fraction of the raw text bytes and never re-tokenize. A
+    * query whose pruned postings fit [[PostingsCollectCap]] is scored
+    * on the driver after ONE capped collect and returns a local frame
+    * (see [[indexedTopK]]); a larger one scores lazily through the
+    * broadcast tail both BM25 paths share. Scores are bit-identical
+    * to [[bm25TopK]] (same tokenizer contract, same contribution
+    * expression, exact decimal sums). */
   def bm25TopKIndexed(index: DataFrame, stats: (Long, Long), id: String,
                       queries: DataFrame, qid: String, qtext: String,
                       k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"bm25TopKIndexed: k must be >= 1 (got $k)")
     require(k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
-    val (qterms, terms) = collectedQueryTerms(queries, qid, qtext)
-    indexedTopK(index, stats, id, qterms, terms, qid, k, k1, b)
+    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext)
+    indexedTopK(index, stats, id, qterms, qrows, qid, k, k1, b)
   }
 
-  /** [[bm25TopKIndexed]] over already-collected query terms. */
+  /** Most pruned postings rows [[indexedTopK]] scores on the driver;
+    * past it the broadcast tail [[scoreAndCut]] scores. */
+  private val PostingsCollectCap = 100000
+
+  /** [[bm25TopKIndexed]] over already-collected query terms. A serving
+    * query's pruned postings are query-sized, so with at most
+    * [[TermInlineCap]] distinct terms, integral document ids and
+    * string or integral query ids the query is scored on the DRIVER:
+    * ONE job collects the pruned postings (each task stops after
+    * [[PostingsCollectCap]] + 1 rows), and the driver counts document
+    * frequencies, evaluates every posting's contribution with Spark's
+    * own expression over a local relation (no job), sums them per
+    * (query, document) exactly in decimal(38,18), rounds through
+    * Spark's `round` the same way, and cuts the top k. The result is a
+    * local frame, computed at call time. Past any of those bounds the
+    * broadcast tail [[scoreAndCut]] scores lazily (past the postings
+    * cap after the one capped job). Both paths sum the same decimal
+    * contributions, so scores are bit-identical. */
   private def indexedTopK(index: DataFrame, stats: (Long, Long), id: String,
-                          qterms: DataFrame, terms: Seq[String], qid: String,
+                          qterms: DataFrame, qrows: Seq[Row], qid: String,
                           k: Int, k1: Double, b: Double): DataFrame = {
     // literal In() so the term pruning reaches the postings parquet
     // scan as a PushedFilter — with the index term-clustered on write,
     // row-group min/max stats skip every non-matching group, where the
     // old broadcast semi-join decoded the full postings file per call
+    val terms = qrows.map(_.getString(1))
     val tf = pruneByTermSet(index, terms, qterms, col("term"))
-    val statsDf = index.sparkSession.range(1)
-      .select(lit(stats._1).as("nd"), lit(stats._2).as("tl"))
-    scoreAndCut(tf, statsDf, id, qterms, qid, k, k1, b)
+    def integral(t: DataType) = t match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    val qidType = qterms.schema(qid).dataType
+    val local =
+      if (terms.distinct.size > TermInlineCap || !integral(tf.schema(id).dataType) ||
+          !(qidType == StringType || integral(qidType))) None
+      else driverTopK(tf, stats, id, qterms, qrows, qid, k, k1, b)
+    local.getOrElse {
+      val statsDf = index.sparkSession.range(1)
+        .select(lit(stats._1).as("nd"), lit(stats._2).as("tl"))
+      scoreAndCut(tf, statsDf, id, qterms, qid, k, k1, b)
+    }
+  }
+
+  /** The driver path of [[indexedTopK]]; None past [[PostingsCollectCap]]
+    * pruned postings. */
+  private def driverTopK(tf: DataFrame, stats: (Long, Long), id: String,
+                         qterms: DataFrame, qrows: Seq[Row], qid: String,
+                         k: Int, k1: Double, b: Double): Option[DataFrame] = {
+    val spark = tf.sparkSession
+    val cap = PostingsCollectCap
+    val postings = tf.select(col(id), col("dl"), col("tf"), col("term"),
+      (col("tf") > 0).as("__pos"))
+    val rows = postings.mapPartitions((it: Iterator[Row]) => it.take(cap + 1))(
+      Encoders.row(postings.schema)).collect()
+    if (rows.length > cap) return None
+    // document frequency: postings with tf > 0 per term, as scoreAndCut
+    // counts them
+    val dfc = rows.groupMapReduce(_.getString(3))(r =>
+      if (!r.isNullAt(4) && r.getBoolean(4)) 1L else 0L)(_ + _)
+    def localFrame(rs: Seq[Row], schema: StructType) =
+      spark.createDataFrame(rs.asJava, schema)
+    // each posting's contribution, evaluated by Spark over a local
+    // relation: the projection folds into it, so no job runs
+    val contribs = localFrame(
+        rows.toSeq.map(r => Row(r.get(0), r.get(1), r.get(2), dfc(r.getString(3)))),
+        StructType(postings.schema.fields.take(3) :+ StructField("dfc", LongType)))
+      .select(contribution(lit(stats._1), lit(stats._2), k1, b)
+        .cast("decimal(38,18)"))
+      .collect()
+    // per (query, document): the exact decimal sum; a group whose every
+    // contribution is NULL sums to NULL, as Spark's sum does
+    val qidsOf = qrows.groupMap(_.getString(1))(_.get(0))
+    val sums = scala.collection.mutable.LinkedHashMap
+      .empty[(Any, Any), Option[java.math.BigDecimal]]
+    rows.iterator.zip(contribs.iterator).foreach { case (r, c) =>
+      val d = Option(c.getDecimal(0))
+      qidsOf.getOrElse(r.getString(3), Nil).foreach { q =>
+        val key = (q, r.get(0))
+        sums(key) = (sums.getOrElse(key, None), d) match {
+          case (Some(x), Some(y)) => Some(x.add(y))
+          case (x, y) => x.orElse(y)
+        }
+      }
+    }
+    val scored = localFrame(
+        sums.iterator.map { case ((q, doc), v) => Row(q, doc, v.orNull) }.toSeq,
+        StructType(Seq(qterms.schema(qid), postings.schema(id),
+          StructField("__sum", DecimalType(38, 18)))))
+      .select(col(qid), col(id), round(col("__sum").cast("double"), 6).as("bm25"))
+    // the GroupedTopK cut: bm25 desc nulls last, then id asc nulls first
+    val order: Ordering[Row] = (x: Row, y: Row) => {
+      val byScore = (x.isNullAt(2), y.isNullAt(2)) match {
+        case (true, true) => 0
+        case (true, false) => 1
+        case (false, true) => -1
+        case _ => java.lang.Double.compare(y.getDouble(2), x.getDouble(2))
+      }
+      if (byScore != 0) byScore
+      else (x.isNullAt(1), y.isNullAt(1)) match {
+        case (true, true) => 0
+        case (true, false) => -1
+        case (false, true) => 1
+        case _ => java.lang.Long.compare(x.getAs[Number](1).longValue,
+          y.getAs[Number](1).longValue)
+      }
+    }
+    val top = scored.collect().toSeq.groupBy(_.get(0)).values
+      .flatMap(_.sorted(order).take(k)).toSeq
+    Some(localFrame(top, scored.schema))
   }
 
   /** RM3-style pseudo-relevance-feedback expansion (Lavrenko & Croft
@@ -384,8 +498,8 @@ object Retrieval {
     }
     require(k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
-    val (qterms, terms) = collectedQueryTerms(queries, qid, qtext)
-    val first = indexedTopK(index, stats, id, qterms, terms, qid, fbDocs, k1, b)
+    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext)
+    val first = indexedTopK(index, stats, id, qterms, qrows, qid, fbDocs, k1, b)
     // The feedback-doc list is (queries × fbDocs)-sized: collect it
     // once and replay it as a LITERAL frame. Lazily, `expanded` fed
     // BOTH the pass-2 term set and the scoring join — two independent

@@ -503,20 +503,44 @@ object Sources {
 
   /** The file names an archived manifest version pins. */
   def readManifestVersion(conf: org.apache.hadoop.conf.Configuration,
-                          path: String, version: Long): Seq[String] = {
+                          path: String, version: Long): Seq[String] =
+    readVersionFile(conf, path, version, "readManifestVersion")._1
+
+  private def readVersionFile(conf: org.apache.hadoop.conf.Configuration,
+                              path: String, version: Long, who: String):
+      (Seq[String], Map[String, String]) = {
     import org.apache.hadoop.fs.Path
     val p = new Path(new Path(path, "_manifest_log"), f"v$version%06d")
-    val fs = p.getFileSystem(conf)
-    require(fs.exists(p),
-      s"readManifestVersion: $path has no archived version $version " +
+    val parsed = parseManifestFile(conf, p, who)
+    require(parsed.isDefined,
+      s"$who: $path has no archived version $version " +
         s"(have: ${manifestLogVersions(conf, path).mkString(",")})")
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    val lines = new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty)
-    require(lines.nonEmpty && lines.head == "graft-manifest 1",
-      s"readManifestVersion: $p is not a graft manifest")
-    lines.tail.filterNot(_.startsWith("#")).toSeq
+    parsed.get
+  }
+
+  /** One manifest file (the head or an archived version) parsed from
+    * ONE read: its file names and its '#key value' metadata. None when
+    * the file does not exist. */
+  private def parseManifestFile(conf: org.apache.hadoop.conf.Configuration,
+                                p: org.apache.hadoop.fs.Path, who: String):
+      Option[(Seq[String], Map[String, String])] = {
+    val fs = p.getFileSystem(conf)
+    val bytes =
+      try {
+        val in = fs.open(p)
+        try Some(in.readAllBytes()) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    bytes.map { b =>
+      val lines = new String(b, "UTF-8").split("\n").filter(_.nonEmpty)
+      require(lines.nonEmpty && lines.head == "graft-manifest 1",
+        s"$who: $p opens with '${lines.headOption.getOrElse("").take(40)}' " +
+          "— not a graft manifest (or a newer format); expected 'graft-manifest 1'")
+      val (metaLines, names) = lines.tail.partition(_.startsWith("#"))
+      (names.toSeq, metaLines.map { l =>
+        val sp = l.indexOf(' ')
+        (l.substring(1, sp), l.substring(sp + 1))
+      }.toMap)
+    }
   }
 
   /** TIME TRAVEL: read the table as archived manifest `version` pinned
@@ -540,22 +564,8 @@ object Sources {
   /** The '#key value' metadata of an archived manifest version. */
   def readManifestVersionMeta(conf: org.apache.hadoop.conf.Configuration,
                               path: String,
-                              version: Long): Map[String, String] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(new Path(path, "_manifest_log"), f"v$version%06d")
-    val fs = p.getFileSystem(conf)
-    require(fs.exists(p),
-      s"readManifestVersionMeta: $path has no archived version $version")
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    new String(bytes, "UTF-8").split("\n")
-      .filter(_.startsWith("#"))
-      .map { l =>
-        val sp = l.indexOf(' ')
-        (l.substring(1, sp), l.substring(sp + 1))
-      }.toMap
-  }
+                              version: Long): Map[String, String] =
+    readVersionFile(conf, path, version, "readManifestVersionMeta")._2
 
   /** Snapshot history as a frame: (version, n_files, is_head) —
     * the audit read behind time travel and rollback. */
@@ -590,41 +600,25 @@ object Sources {
     manifestLogVersions(conf, path).last
   }
 
+  /** The head manifest's file names and '#key value' metadata, parsed
+    * from ONE read of `_MANIFEST`, so both belong to the same version
+    * (two opens could straddle a publish and mix one version's names
+    * with another's meta). None for an unmanifested table. */
+  private def readManifestHead(conf: org.apache.hadoop.conf.Configuration,
+                               path: String): Option[(Seq[String], Map[String, String])] =
+    parseManifestFile(conf, new org.apache.hadoop.fs.Path(path, "_MANIFEST"),
+      "readManifest")
+
   /** The manifest's file names, or None for an unmanifested table. */
   def readManifest(conf: org.apache.hadoop.conf.Configuration,
-                   path: String): Option[Seq[String]] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path, "_MANIFEST")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    val lines = new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty)
-    require(lines.nonEmpty && lines.head == "graft-manifest 1",
-      s"readManifest: $p opens with '${lines.headOption.getOrElse("").take(40)}' " +
-        "— not a graft manifest (or a newer format); expected 'graft-manifest 1'")
-    Some(lines.tail.filterNot(_.startsWith("#")).toSeq)
-  }
+                   path: String): Option[Seq[String]] =
+    readManifestHead(conf, path).map(_._1)
 
   /** The head manifest's '#key value' metadata (empty if none / no
     * manifest). */
   def readManifestMeta(conf: org.apache.hadoop.conf.Configuration,
-                       path: String): Map[String, String] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path, "_MANIFEST")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Map.empty
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    new String(bytes, "UTF-8").split("\n")
-      .filter(_.startsWith("#"))
-      .map { l =>
-        val sp = l.indexOf(' ')
-        (l.substring(1, sp), l.substring(sp + 1))
-      }.toMap
-  }
+                       path: String): Map[String, String] =
+    readManifestHead(conf, path).map(_._2).getOrElse(Map.empty)
 
   /** Adopt an existing plain-parquet directory into the manifest
     * convention: pin the current listing. Idempotent (an existing
@@ -651,14 +645,25 @@ object Sources {
     * optimistic check with a STALE file set and unpublish the racing
     * writer's files — the exact lost update the check exists to
     * refuse. [[graft.streaming.ManifestSink.appendBatch]] reads in
-    * this order natively; every maintenance op goes through here. */
-  private def pinSnapshot(spark: SparkSession,
-                          path: String): (Seq[String], Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    publishManifest(spark, path)
+    * this order natively; every maintenance op goes through here.
+    * Returns (names, meta, v0): names and meta come from one read of
+    * the head, so a rewrite reads its files through the schema
+    * metadata of the version it pinned. */
+  private def pinSnapshot(spark: SparkSession, path: String):
+      (Seq[String], Map[String, String], Long) =
+    pinHead(spark.sessionState.newHadoopConf(), path).getOrElse {
+      publishManifest(spark, path)
+      pinSnapshot(spark, path)
+    }
+
+  /** [[pinSnapshot]] without the adoption: the head VERSION first, then
+    * the names and meta from one read of the head; None for an
+    * unmanifested table (the streaming sinks bootstrap those). */
+  private[graft] def pinHead(conf: org.apache.hadoop.conf.Configuration,
+                             path: String):
+      Option[(Seq[String], Map[String, String], Long)] = {
     val v0 = manifestVersion(conf, path)
-    val names = readManifest(conf, path).getOrElse(Seq.empty)
-    (names, v0)
+    readManifestHead(conf, path).map { case (names, meta) => (names, meta, v0) }
   }
 
   /** Read a manifested table: exactly the manifest's files, pinned at
@@ -673,11 +678,10 @@ object Sources {
     * directory read when no manifest exists (an unmanifested table
     * has no maintenance guarantee to honor). */
   def readManifested(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    readManifest(conf, path) match {
-      case Some(names) =>
+    readManifestHead(spark.sessionState.newHadoopConf(), path) match {
+      case Some((names, meta)) =>
         require(names.nonEmpty, s"readManifested: $path manifest is empty")
-        readFilesApplyingDefaults(spark, path, names)
+        readFilesWithMeta(spark, path, names, schemaMetaOf(meta))
       case None => readParquet(spark, path)
     }
   }
@@ -787,11 +791,10 @@ object Sources {
     require(!name.exists(c => c == ' ' || c == '\n' || c == ':'),
       s"addColumnAtomic: column name '$name' must be space/colon-free")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
-    val visible = readFilesWithMeta(spark, path, names,
-      schemaMetaOf(readManifestMeta(conf, path))).columns
-    require(!visible.contains(name) &&
-        !columnDefaults(conf, path).contains(name),
+    val (names, meta, v0) = pinSnapshot(spark, path)
+    val smPrev = schemaMetaOf(meta)
+    val visible = readFilesWithMeta(spark, path, names, smPrev).columns
+    require(!visible.contains(name) && !smPrev.defaults.contains(name),
       s"addColumnAtomic: column '$name' already exists at $path")
     // footer presence is the reader's ground truth for "has an
     // explicit value", so a name a live file still PHYSICALLY carries
@@ -811,7 +814,6 @@ object Sources {
     // neutralize: the footer probe above proved no live file carries
     // the physical name, so the old entries are inert for every
     // pinned file; archived versions keep their own era's meta.
-    val smPrev = schemaMetaOf(readManifestMeta(conf, path))
     val neutralized: Map[String, String] =
       (if (smPrev.drops.contains(name)) Map(s"coldrop:$name" -> "0")
        else Map.empty[String, String]) ++
@@ -819,9 +821,9 @@ object Sources {
         case (p, logical) if p == name || logical == name =>
           s"colrename:$p" -> "!"
       }
-    val meta = readManifestMeta(conf, path) ++ neutralized +
-      (s"coldefault:$name" -> s"$dataType:${String.valueOf(default)}")
-    writeManifest(conf, path, names, meta, v0)
+    // only the changed keys: writeManifest carries the rest forward
+    writeManifest(conf, path, names, neutralized +
+      (s"coldefault:$name" -> s"$dataType:${String.valueOf(default)}"), v0)
   }
 
   /** Metadata-only ALTER TABLE DROP COLUMN on a manifested table —
@@ -843,8 +845,8 @@ object Sources {
     require(!name.exists(c => c == ' ' || c == '\n' || c == ':'),
       s"dropColumnAtomic: column name '$name' must be space/colon-free")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
-    val sm = schemaMetaOf(readManifestMeta(conf, path))
+    val (names, meta, v0) = pinSnapshot(spark, path)
+    val sm = schemaMetaOf(meta)
     val visible = readFilesWithMeta(spark, path, names, sm).columns
     require(visible.contains(name),
       s"dropColumnAtomic: no column '$name' at $path " +
@@ -854,10 +856,9 @@ object Sources {
     val physNames = sm.renames.collect {
       case (p, logical) if logical == name => p
     }.toSeq :+ name
-    val meta = readManifestMeta(conf, path) ++
-      physNames.map(p => s"coldrop:$p" -> "1") +
-      (s"coldefault:$name" -> "!")
-    writeManifest(conf, path, names, meta, v0)
+    writeManifest(conf, path, names,
+      physNames.map(p => s"coldrop:$p" -> "1").toMap +
+        (s"coldefault:$name" -> "!"), v0)
   }
 
   /** Metadata-only ALTER TABLE RENAME COLUMN on a manifested table:
@@ -877,8 +878,8 @@ object Sources {
       s"renameColumnAtomic: column name '$newName' must be space/colon-free")
     require(oldName != newName, "renameColumnAtomic: old == new")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
-    val sm = schemaMetaOf(readManifestMeta(conf, path))
+    val (names, meta, v0) = pinSnapshot(spark, path)
+    val sm = schemaMetaOf(meta)
     val visible = readFilesWithMeta(spark, path, names, sm).columns
     require(visible.contains(oldName),
       s"renameColumnAtomic: no column '$oldName' at $path " +
@@ -917,9 +918,8 @@ object Sources {
             logical != oldName =>
           s"colrename:$p" -> "!"
       }
-    val meta = readManifestMeta(conf, path) ++ neutralized ++ repointed ++
-      defaultMove + (s"colrename:$oldName" -> newName)
-    writeManifest(conf, path, names, meta, v0)
+    writeManifest(conf, path, names, neutralized ++ repointed ++
+      defaultMove + (s"colrename:$oldName" -> newName), v0)
   }
 
   /** The stored ADD COLUMN defaults: name → (type, value). Tombstoned
@@ -1037,8 +1037,8 @@ object Sources {
     import org.apache.spark.sql.functions.col
     require(numFiles >= 1, "optimizeClusteredAtomic: numFiles must be >= 1")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
-    val base = readFilesApplyingDefaults(spark, path, names)
+    val (names, meta, v0) = pinSnapshot(spark, path)
+    val base = readFilesWithMeta(spark, path, names, schemaMetaOf(meta))
     val bs = graft.functions.ZOrder.bounds(base, cols)
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
@@ -1090,8 +1090,9 @@ object Sources {
     import org.apache.spark.sql.functions.{coalesce => fnCoalesce,
       count, input_file_name, lit, not}
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
-    val hits = readManifested(spark, path).filter(predicate)
+    val (names, meta, v0) = pinSnapshot(spark, path)
+    val sm = schemaMetaOf(meta)
+    val hits = readFilesWithMeta(spark, path, names, sm).filter(predicate)
       .groupBy(input_file_name().as("__f"))
       .agg(count(lit(1)).as("__n")).collect()
     if (hits.isEmpty) return (Seq.empty, 0L)
@@ -1106,8 +1107,8 @@ object Sources {
     // thousand files must not serialize a thousand jobs through the
     // driver); a fully-purged file writes no directory and vanishes
     val keepPred = not(fnCoalesce(predicate, lit(false)))
-    val newNames = rewriteFilesOneJob(spark, path,
-      affected.keys.toSeq.sorted, staging, "delete")(_.filter(keepPred))
+    val newNames = rewriteFilesOneJob(spark, path, affected.keys.toSeq.sorted,
+      sm, staging, "delete")(_.filter(keepPred)).map(_._2)
     val after = names.filterNot(affected.contains) ++ newNames
     writeManifest(conf, path, after, Map.empty, v0) // the atomic publish
     fs.delete(staging, true)
@@ -1134,8 +1135,9 @@ object Sources {
       count, input_file_name, lit, when => fnWhen, col => fnCol}
     require(assignments.nonEmpty, "updateWhereAtomic: no assignments")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
-    val base = readManifested(spark, path)
+    val (names, meta, v0) = pinSnapshot(spark, path)
+    val sm = schemaMetaOf(meta)
+    val base = readFilesWithMeta(spark, path, names, sm)
     assignments.keys.foreach { c =>
       require(base.columns.contains(c),
         s"updateWhereAtomic: assigned column '$c' not in table schema " +
@@ -1157,13 +1159,13 @@ object Sources {
     val hit = fnCoalesce(predicate, lit(false))
     val payload = base.columns.toSeq
     val types = base.schema.fields.map(f => f.name -> f.dataType).toMap
-    val newNames = rewriteFilesOneJob(spark, path,
-      affected.keys.toSeq.sorted, staging, "update") { src =>
-      assignments.foldLeft(src.asInstanceOf[DataFrame]) {
+    val newNames = rewriteFilesOneJob(spark, path, affected.keys.toSeq.sorted,
+      sm, staging, "update") { src =>
+      assignments.foldLeft(src) {
         case (df, (c, expr)) =>
           df.withColumn(c, fnWhen(hit, expr.cast(types(c))).otherwise(fnCol(c)))
       }.select((payload :+ "__src").map(fnCol): _*)
-    }
+    }.map(_._2)
     val after = names.filterNot(affected.contains) ++ newNames
     writeManifest(conf, path, after, Map.empty, v0) // the atomic publish
     fs.delete(staging, true)
@@ -1188,7 +1190,7 @@ object Sources {
     require(targetFileBytes >= 1,
       "compactSmallFilesAtomic: targetFileBytes must be >= 1")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
+    val (names, meta, v0) = pinSnapshot(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     val stats = names.map(n => fs.getFileStatus(new Path(path, n)))
@@ -1218,7 +1220,8 @@ object Sources {
         bin.map(p => (p.getName, i))
       }).toDF("__name", "__bin")
     val binDir = new Path(staging, "__bins")
-    readFilesApplyingDefaults(spark, path, toRewrite.flatten.map(_.getName))
+    readFilesWithMeta(spark, path, toRewrite.flatten.map(_.getName),
+      schemaMetaOf(meta))
       .withColumn("__name", element_at(split(input_file_name(), "/"), -1))
       .join(broadcast(binLookup), Seq("__name")).drop("__name")
       .repartition(fnCol("__bin"))
@@ -1257,7 +1260,7 @@ object Sources {
     import org.apache.hadoop.fs.Path
     require(numFiles >= 1, s"insertIntoAtomic: numFiles=$numFiles must be >= 1")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
+    val (names, _, v0) = pinSnapshot(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     val staging = new Path(path,
@@ -1278,51 +1281,59 @@ object Sources {
   }
 
   /** ONE-JOB rewrite of a set of table files (DELETE / UPDATE / MERGE
-    * share it): all affected files in one scan tagged by source-file
-    * BASENAME (tagging with the full input_file_name URI would make
-    * url-encoded `__src=` partition directory names that can exceed
-    * the 255-byte filesystem name limit on deep paths), transformed,
-    * and written PARTITIONED by the tag — repartition on the tag puts
-    * each source file in exactly one task, preserving the
-    * one-file-per-source layout; a source file whose rows all vanish
-    * writes no directory and drops out of the returned names. One
-    * Spark job regardless of how many files the predicate/delta
-    * touched — a per-file loop would serialize a wide rewrite through
-    * the driver. The transform receives the tagged frame and must
-    * keep the `__src` column on its output rows. */
+    * share it): all affected files in one scan, read through the
+    * snapshot's schema metadata `sm`, tagged by source-file BASENAME
+    * (tagging with the full input_file_name URI would make url-encoded
+    * `__src=` partition directory names that can exceed the 255-byte
+    * filesystem name limit on deep paths), transformed, unioned with
+    * the `extra` rows the caller tagged itself (MERGE's replacement
+    * payloads and inserts), and written PARTITIONED by the tag —
+    * repartition on the tag puts each tag in exactly one task, so
+    * every source file is rewritten to one file and every extra tag
+    * lands in one file; a tag whose rows all vanish writes no
+    * directory and drops out of the result. One Spark job regardless
+    * of how many files the predicate/delta touched — a per-file loop
+    * would serialize a wide rewrite through the driver. The transform
+    * receives the tagged frame and must keep the `__src` column on its
+    * output rows. Returns (tag, new file name) per written file. */
   private def rewriteFilesOneJob(spark: SparkSession, path: String,
-                                 affected: Seq[String],
+                                 affected: Seq[String], sm: SchemaMeta,
                                  staging: org.apache.hadoop.fs.Path,
-                                 prefix: String)
+                                 prefix: String,
+                                 extra: Option[DataFrame] = None)
                                 (transform: DataFrame => DataFrame):
-      Seq[String] = {
+      Seq[(String, String)] = {
     import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     import org.apache.spark.sql.functions.{col => fnCol, element_at,
       input_file_name, split}
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val src = readFilesApplyingDefaults(spark, path, affected)
-      .withColumn("__src", element_at(split(input_file_name(), "/"), -1))
-    val out = transform(src)
+    val rewritten =
+      if (affected.isEmpty) None
+      else Some(transform(readFilesWithMeta(spark, path, affected, sm)
+        .withColumn("__src", element_at(split(input_file_name(), "/"), -1))))
+    val out = (rewritten ++ extra).reduce(_.unionByName(_))
     val dir = new Path(staging, "__rewrites")
     out.repartition(fnCol("__src"))
       .write.partitionBy("__src").mode(SaveMode.Overwrite)
       .parquet(dir.toString)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val runTag = java.util.UUID.randomUUID().toString.take(8)
     val dirs =
       if (fs.exists(dir))
         fs.listStatus(dir).map(_.getPath)
           .filter(_.getName.startsWith("__src=")).sortBy(_.getName).toSeq
       else Seq.empty[Path]
     dirs.zipWithIndex.flatMap { case (d, di) =>
+      val src = unescapePathName(d.getName.stripPrefix("__src="))
       fs.listStatus(d).map(_.getPath)
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
         .zipWithIndex.map { case (p, pi) =>
-          val dst = new Path(root, s"$prefix-$tag-$di-$pi.parquet")
+          val dst = new Path(root, s"$prefix-$runTag-$di-$pi.parquet")
           require(fs.rename(p, dst),
             s"$prefix rewrite: rename $p -> $dst failed")
-          dst.getName
+          (src, dst.getName)
         }
     }
   }
@@ -1331,41 +1342,84 @@ object Sources {
   final case class MergeResult(rewritten: Seq[String], appended: Seq[String],
                                updated: Long, deleted: Long, inserted: Long)
 
+  /** Most delta rows [[mergeAtomic]] collects to the driver, and most
+    * table rows holding the delta's keys it collects back. Past either
+    * it fails loudly: merge the change set in smaller batches, or
+    * rewrite the whole table with
+    * [[graft.ops.Snapshot.applyChangesAtomic]]. */
+  val MergeDeltaCap = 100000
+
+  /** The `__src` tag prefix of [[mergeAtomic]]'s insert rows; a table
+    * file name never starts with an underscore. */
+  private val InsertTag = "__insert_"
+
   /** Keyed MERGE INTO on a manifested table — Delta's MERGE semantics
     * ([[graft.ops.Snapshot.applyChanges]]: op = "upsert" replaces or
     * inserts its key, op = "delete" removes it) executed at the FILE
     * grain instead of [[graft.ops.Snapshot.applyChangesAtomic]]'s
-    * full-table rewrite. The 100 TB shape: ONE key-pruned scan (the
-    * delta's keys broadcast into a semi-join whose predicate reaches
-    * the parquet footers, so row-group stats skip untouched files
-    * wholesale) finds the files that actually HOLD matched keys; only
-    * those are rewritten (matched upserts replaced by their whole-row
-    * payload, matched deletes dropped, everything else verbatim);
-    * unmatched upserts append as fresh files; ONE manifest rename
-    * publishes rewrites + appends + survivors together. A delta
-    * touching one user's rows rewrites kilobytes of a petabyte table
-    * when the layout clusters the key (the z-order/bloom story feeding
-    * straight into this). Old files stay for time travel until
-    * [[vacuumUnreferenced]].
+    * full-table rewrite. The delta is delta-sized (a CDC micro-batch),
+    * so the merge is planned on the driver and runs at most three
+    * Spark jobs however many files it touches:
+    *  1. The delta is collected ONCE, projected to the table's columns
+    *    and cast to their types (a local relation collects with no
+    *    job). More than [[MergeDeltaCap]] rows fail loudly.
+    *  1. The driver checks it: every op is upsert or delete (a NULL op
+    *    too is rejected — a malformed CDC row must not be silently
+    *    skipped) and no key repeats (resolve last-writer-wins
+    *    upstream; two NULL keys repeat, as in
+    *    [[graft.ops.Snapshot.applyChanges]]).
+    *  1. ONE key-pruned scan, `id IN (delta keys)` with no broadcast
+    *    and no shuffle, returns (file, key) for every table row holding
+    *    a delta key: the affected files and the matched keys together.
+    *    The `In` reaches the parquet footers, so row-group stats skip
+    *    untouched files wholesale. Each task stops after
+    *    [[MergeDeltaCap]] + 1 rows, and more rows than the cap fail
+    *    loudly.
+    *  1. The inserts are the delta's upsert keys minus the matched
+    *    keys, computed on the driver. A NULL key never matches: an
+    *    upserted NULL key is inserted, and table rows with a NULL key
+    *    survive.
+    *  1. ONE partitioned write ([[rewriteFilesOneJob]]): the affected
+    *    files keep the rows whose key is NULL or not matched, unioned
+    *    with a local relation of the replacement payloads (each tagged
+    *    with the file its key was found in) and the inserts (tagged
+    *    `insertFiles` ways). A fully deleted file writes nothing and
+    *    leaves the manifest.
     *
-    * Contracts: the delta is delta-sized (it is broadcast and its
-    * per-op file histogram collects to the driver); keys are unique in
-    * the batch (rejected loudly otherwise — resolve last-writer-wins
-    * upstream); the payload carries the full base schema (whole-row
-    * upserts, the CDC-feed contract). The rewrite is ONE Spark job
-    * regardless of how many files the delta touches (all affected
-    * files scanned together, written partitioned by source file) —
-    * still cluster the key so a delta REWRITES few files' bytes. */
+    * ONE manifest rename publishes rewrites + inserts + untouched
+    * files together; a delta that matches and inserts nothing
+    * publishes nothing. A delta touching one user's rows rewrites
+    * kilobytes of a petabyte table when the layout clusters the key
+    * (the z-order/bloom story feeding straight into this). Old files
+    * stay for time travel until [[vacuumUnreferenced]]. The payload
+    * must carry the full table schema (whole-row upserts, the CDC-feed
+    * contract). */
   def mergeAtomic(spark: SparkSession, path: String, changes: DataFrame,
                   id: String, op: String = "op",
                   insertFiles: Int = 1,
-                  publishMeta: Map[String, String] = Map.empty): MergeResult = {
+                  publishMeta: Map[String, String] = Map.empty): MergeResult =
+    mergePinned(spark, path, changes, id, op, insertFiles, publishMeta,
+      pinSnapshot(spark, path))
+
+  /** [[mergeAtomic]] into the snapshot `pin` = (names, meta, version)
+    * the caller pinned, so [[graft.streaming.ManifestSink.upsertBatch]]
+    * checks its batch id against the same head it merges into. */
+  private[graft] def mergePinned(spark: SparkSession, path: String,
+                                 changes: DataFrame, id: String, op: String,
+                                 insertFiles: Int,
+                                 publishMeta: Map[String, String],
+                                 pin: (Seq[String], Map[String, String], Long)):
+      MergeResult = {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.{broadcast, coalesce => fnCoalesce,
-      col => fnCol, count, input_file_name, lit, struct, when => fnWhen}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col => fnCol, input_file_name}
+    import org.apache.spark.sql.types.{StringType, StructField}
+    import scala.jdk.CollectionConverters._
+    require(insertFiles >= 1, s"mergeAtomic: insertFiles=$insertFiles must be >= 1")
     val conf = spark.sessionState.newHadoopConf()
-    val (names, v0) = pinSnapshot(spark, path)
-    val base = readManifested(spark, path)
+    val (names, meta, v0) = pin
+    val sm = schemaMetaOf(meta)
+    val base = readFilesWithMeta(spark, path, names, sm)
     val payloadCols = base.columns.toSeq
     val types = base.schema.fields.map(f => f.name -> f.dataType).toMap
     require(payloadCols.contains(id),
@@ -1374,77 +1428,89 @@ object Sources {
     require(missingCols.isEmpty,
       s"mergeAtomic: delta lacks payload columns ${missingCols.mkString(", ")} " +
         "— upserts are whole-row (the CDC-feed contract)")
-    // NULL-safe: a NULL op must be rejected too — `!isin(...)` alone
-    // evaluates NULL on a NULL op, the filter drops the row, and the
-    // malformed CDC row would be silently ignored by both the rewrite
-    // join and the insert path (a partial apply without error)
-    val badOp = changes.filter(fnCol(op).isNull ||
-      !fnCol(op).isin("upsert", "delete")).limit(1).collect()
+    // 1. the delta, collected once in the table's types
+    val rows = changes.select(payloadCols.map(c => fnCol(c).cast(types(c)).as(c)) :+
+        fnCol(op).cast(StringType): _*)
+      .limit(MergeDeltaCap + 1).collect()
+    require(rows.length <= MergeDeltaCap,
+      s"mergeAtomic: the delta holds more than $MergeDeltaCap rows " +
+        "(MergeDeltaCap) — merge it in smaller batches, or rewrite the " +
+        "table with Snapshot.applyChangesAtomic")
+    // 2. validation on the driver
+    val opAt = payloadCols.length
+    val keyAt = payloadCols.indexOf(id)
+    def keyOf(r: Row): Any = normalizedKey(r.get(keyAt))
+    val badOp = rows.map(_.getString(opAt)).find(o => o != "upsert" && o != "delete")
     require(badOp.isEmpty,
-      s"mergeAtomic: op column carries a value other than upsert/delete")
-    val dupKeys = changes.groupBy(fnCol(id)).agg(count(lit(1)).as("__c"))
-      .filter(fnCol("__c") > 1L).limit(1).collect()
-    require(dupKeys.isEmpty,
-      s"mergeAtomic: delta carries duplicate keys (e.g. " +
-        s"${if (dupKeys.nonEmpty) dupKeys.head.get(0) else ""}) — resolve " +
-        "the batch (last-writer-wins upstream) before merging")
-    // the key-pruned scan: which files hold matched keys, per op —
-    // broadcast keeps the base side shuffle-free and lets the join
-    // keys prune row groups at the footer
-    val delta = changes.select(
-      fnCol(id).cast(types(id)).as("__k"), fnCol(op).as("__op"),
-      struct(payloadCols.map(c => fnCol(c).cast(types(c)).as(c)): _*).as("__row"))
-    val hits = base.select(fnCol(id), input_file_name().as("__f"))
-      .join(broadcast(delta.select(fnCol("__k"), fnCol("__op"))),
-        fnCol(id) === fnCol("__k"))
-      .groupBy("__f", "__op").agg(count(lit(1)).as("__n")).collect()
-    val affected = hits.map(r => new Path(r.getString(0)).getName).distinct.toSeq.sorted
-    val updated = hits.filter(_.getString(1) == "upsert").map(_.getLong(2)).sum
-    val deleted = hits.filter(_.getString(1) == "delete").map(_.getLong(2)).sum
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+      s"mergeAtomic: op column carries a value other than upsert/delete " +
+        s"(${badOp.orNull})")
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    val dup = rows.iterator.map(keyOf).find(k => !seen.add(k))
+    require(dup.isEmpty,
+      s"mergeAtomic: delta carries duplicate keys (e.g. ${dup.orNull}) — " +
+        "resolve the batch (last-writer-wins upstream) before merging")
+    // 3. one key-pruned scan: the affected files and the matched keys
+    val keys = rows.map(_.get(keyAt)).filter(_ != null).toSeq
+    val hits =
+      if (keys.isEmpty) Array.empty[(String, Any)]
+      else collectCapped(base.filter(fnCol(id).isin(keys: _*))
+          .select(input_file_name(), fnCol(id)), "mergeAtomic: table rows " +
+          "holding the delta's keys")
+        .map(r => (new Path(r.getString(0)).getName, r.get(1)))
+    val matched = hits.groupBy(h => normalizedKey(h._2))
+    val ups = rows.filter(_.getString(opAt) == "upsert")
+    val upsertKeys = ups.map(keyOf).toSet
+    val updated = hits.count(h => upsertKeys(normalizedKey(h._2))).toLong
+    val deleted = hits.length - updated
+    val affected = hits.map(_._1).distinct.sorted.toSeq
+    // 4. inserts: the upsert keys no table row holds
+    val (replacing, inserting) = ups.partition(r => matched.contains(keyOf(r)))
+    if (affected.isEmpty && inserting.isEmpty)
+      return MergeResult(Seq.empty, Seq.empty, 0L, 0L, 0L)
+    def tagged(r: Row, src: String) = Row.fromSeq(r.toSeq.take(opAt) :+ src)
+    val extra = replacing.map(r => tagged(r, matched(keyOf(r)).map(_._1).min)) ++
+      inserting.zipWithIndex.map { case (r, i) => tagged(r, s"$InsertTag${i % insertFiles}") }
+    val extraDf =
+      if (extra.isEmpty) None
+      else Some(spark.createDataFrame(extra.toSeq.asJava, StructType(
+        base.schema.fields.map(_.copy(nullable = true)) :+
+          StructField("__src", StringType))))
+    // 5. one partitioned write: each affected file minus its matched
+    // rows, the replacement payloads, and the inserts
+    val matchedKeys = matched.values.map(_.head._2).toSeq
+    val keep = fnCol(id).isNull || !fnCol(id).isin(matchedKeys: _*)
+    val fs = new Path(path).getFileSystem(conf)
     val staging = new Path(path,
       s"_merge_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-    // rewrite only the files holding matched keys — ONE Spark job
-    // however many files the delta touched ([[rewriteFilesOneJob]]):
-    // one broadcast merge join over the tagged scan; a fully-deleted
-    // source file vanishes from the manifest
-    val rewrittenNames =
-      if (affected.isEmpty) Seq.empty[String]
-      else rewriteFilesOneJob(spark, path, affected, staging, "merge") {
-        src =>
-          src.join(broadcast(delta), src(id) === fnCol("__k"), "left")
-            .filter(fnCol("__op").isNull || fnCol("__op") === "upsert")
-            .select(payloadCols.map(c =>
-              fnWhen(fnCol("__op") === "upsert", fnCol(s"__row.$c"))
-                .otherwise(src(c)).as(c)) :+ src("__src"): _*)
-      }
-    // unmatched upserts are inserts: anti-join against the base's key
-    // column only (column-pruned scan; compose with BloomPrune when
-    // the delta is large against a huge base)
-    val inserts = changes.filter(fnCol(op) === "upsert")
-      .join(base.select(fnCol(id)), Seq(id), "left_anti")
-      .select(payloadCols.map(c => fnCol(c).cast(types(c)).as(c)): _*)
-    val inserted = inserts.count()
-    val appendedNames =
-      if (inserted == 0L) Seq.empty[String]
-      else {
-        val insDir = new Path(staging, "__inserts")
-        inserts.repartition(insertFiles)
-          .write.mode(SaveMode.Overwrite).parquet(insDir.toString)
-        fs.listStatus(insDir)
-          .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-          .sortBy(_.getName).toSeq.map { p =>
-            val dst = new Path(root, p.getName)
-            require(fs.rename(p, dst), s"mergeAtomic: rename $p -> $dst failed")
-            dst.getName
-          }
-      }
-    val after = names.filterNot(affected.contains) ++ rewrittenNames ++ appendedNames
-    if (affected.nonEmpty || appendedNames.nonEmpty)
-      writeManifest(conf, path, after, publishMeta, v0) // the atomic publish
+    val (appended, rewritten) = rewriteFilesOneJob(spark, path, affected, sm,
+      staging, "merge", extraDf)(_.filter(keep)).partition(_._1.startsWith(InsertTag))
+    val after = names.filterNot(affected.toSet) ++ rewritten.map(_._2) ++
+      appended.map(_._2)
+    writeManifest(conf, path, after, publishMeta, v0) // the atomic publish
     fs.delete(staging, true)
-    MergeResult(rewrittenNames, appendedNames, updated, deleted, inserted)
+    MergeResult(rewritten.map(_._2), appended.map(_._2), updated, deleted,
+      inserting.length.toLong)
+  }
+
+  /** A key as a driver-side set member: a binary key collects as an
+    * array, which compares by identity; Spark's `In` compares it by
+    * content. */
+  private def normalizedKey(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case other => other
+  }
+
+  /** Collect `df` in ONE job, failing loudly past [[MergeDeltaCap]]
+    * rows: each task stops after the cap + 1st row, so the driver
+    * receives at most that many rows per partition (`limit` would plan
+    * Spark's incremental take, which runs a job per round). */
+  private def collectCapped(df: DataFrame, what: String):
+      Array[org.apache.spark.sql.Row] = {
+    val cap = MergeDeltaCap
+    val got = df.mapPartitions((it: Iterator[org.apache.spark.sql.Row]) =>
+      it.take(cap + 1))(org.apache.spark.sql.Encoders.row(df.schema)).collect()
+    require(got.length <= cap, s"$what: more than $cap rows (MergeDeltaCap)")
+    got
   }
 
   /** File-grain CHANGES between two manifest versions: (added,

@@ -37,8 +37,10 @@ object ManifestSink {
     * none. */
   def lastBatchId(conf: org.apache.hadoop.conf.Configuration,
                   path: String): Long =
-    graft.sources.Sources.readManifestMeta(conf, path)
-      .get("batch").map(_.toLong).getOrElse(-1L)
+    standingBatch(graft.sources.Sources.readManifestMeta(conf, path))
+
+  private def standingBatch(meta: Map[String, String]): Long =
+    meta.get("batch").map(_.toLong).getOrElse(-1L)
 
   /** The per-batch half, callable directly for batch-twin testing.
     * Replayed ids (≤ the manifest's standing '#batch') are no-ops. */
@@ -49,7 +51,8 @@ object ManifestSink {
       s"manifestSink: filesPerBatch=$filesPerBatch must be >= 1")
     val spark = batch.sparkSession
     val conf = spark.sessionState.newHadoopConf()
-    val standing = lastBatchId(conf, path)
+    val pin = graft.sources.Sources.pinHead(conf, path)
+    val standing = standingBatch(pin.map(_._2).getOrElse(Map.empty))
     if (batchId <= standing) {
       System.err.println(
         s"[manifestSink] skipping replayed batch $batchId (standing " +
@@ -58,9 +61,7 @@ object ManifestSink {
           "point the restarted stream at a fresh table path")
       return
     }
-    val v0 = graft.sources.Sources.manifestVersion(conf, path)
-    val names = graft.sources.Sources.readManifest(conf, path)
-      .getOrElse(Seq.empty)
+    val (names, _, v0) = pin.getOrElse((Seq.empty[String], Map.empty, 0L))
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) fs.mkdirs(root)
@@ -112,15 +113,23 @@ object ManifestSink {
     * bootstraps the table: its upserts land as the initial file set
     * (its deletes have nothing to delete). Keys must be unique per
     * batch (mergeAtomic's contract — aggregate the CDC feed to
-    * last-writer-wins upstream, e.g. a max_by on a change sequence). */
+    * last-writer-wins upstream, e.g. a max_by on a change sequence).
+    *
+    * Scale shape: the head is pinned once (version, then names and meta
+    * from one read of `_MANIFEST`), and the batch guard, the bootstrap
+    * check and the merge all use that pin. A merge collects the batch
+    * once (at most [[graft.sources.Sources.MergeDeltaCap]] rows, no job
+    * for a local batch), runs one key-pruned scan and one partitioned
+    * write for its rewrites and inserts (at most three Spark jobs with
+    * adaptive execution on), and publishes with one rename. */
   def upsertBatch(batch: DataFrame, path: String, batchId: Long,
                   id: String, op: String = "op",
                   insertFiles: Int = 1): Unit = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions.col
     val spark = batch.sparkSession
     val conf = spark.sessionState.newHadoopConf()
-    val standing = lastBatchId(conf, path)
+    val pin = graft.sources.Sources.pinHead(conf, path)
+    val standing = standingBatch(pin.map(_._2).getOrElse(Map.empty))
     if (batchId <= standing) {
       System.err.println(
         s"[manifestSink] skipping replayed upsert batch $batchId " +
@@ -129,18 +138,16 @@ object ManifestSink {
           "data: point the restarted stream at a fresh table path")
       return
     }
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val hasTable = fs.exists(new Path(path, "_MANIFEST"))
-    if (!hasTable) {
-      // bootstrap: the first batch's upserts ARE the table (a
-      // delete-only first batch has nothing to create — skip, and let
-      // a later batch bootstrap)
-      val ups = batch.filter(col(op) === "upsert").drop(op)
-      if (!ups.isEmpty) appendBatch(ups, path, batchId, insertFiles)
-    } else {
-      graft.sources.Sources.mergeAtomic(spark, path, batch, id, op,
-        insertFiles, publishMeta = Map("batch" -> batchId.toString))
+    pin match {
+      case None =>
+        // bootstrap: the first batch's upserts ARE the table (a
+        // delete-only first batch has nothing to create — skip, and let
+        // a later batch bootstrap)
+        val ups = batch.filter(col(op) === "upsert").drop(op)
+        if (!ups.isEmpty) appendBatch(ups, path, batchId, insertFiles)
+      case Some(p) =>
+        graft.sources.Sources.mergePinned(spark, path, batch, id, op,
+          insertFiles, Map("batch" -> batchId.toString), p)
     }
   }
 

@@ -1994,6 +1994,33 @@ class OpsSpec extends SparkTestBase {
     assert(generators.isEmpty, s"indexed BM25 re-tokenizes: $generators")
   }
 
+  test("bm25TopKIndexed: driver-scored and broadcast-scored queries agree") {
+    import spark.implicits._
+    // integral doc ids score on the driver; string doc ids take the
+    // broadcast tail. Both must equal bm25TopK bit for bit.
+    val docs = (1 to 200).map(i =>
+      (i.toLong, Seq.fill(i % 5 + 1)(s"w${i % 11}").mkString(" ") + " common"))
+      .toDF("doc_id", "text")
+    val qs = Seq(("a", "w3 common"), ("b", "w5 w7"), ("a", "w3")).toDF("q_id", "qtext")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("q_id", "doc_id")
+      .collect().map(r => (r.getString(0), r.get(1).toString, r.getDouble(2))).toSeq
+    val direct = rows(Retrieval.bm25TopK(docs, "doc_id", "text", qs, "q_id", "qtext", k = 4))
+    val stats = Retrieval.corpusStatsOf(docs, "text")
+    val idx = Retrieval.invertedIndex(docs, "doc_id", "text")
+    val driver = Retrieval.bm25TopKIndexed(idx, stats, "doc_id", qs, "q_id", "qtext", k = 4)
+    assert(driver.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(rows(driver) == direct)
+    val strDocs = docs.withColumn("doc_id", col("doc_id").cast("string"))
+    val broadcastScored = Retrieval.bm25TopKIndexed(
+      Retrieval.invertedIndex(strDocs, "doc_id", "text"), stats, "doc_id", qs, "q_id",
+      "qtext", k = 4)
+    assert(!broadcastScored.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(rows(broadcastScored) ==
+      rows(Retrieval.bm25TopK(strDocs, "doc_id", "text", qs, "q_id", "qtext", k = 4)))
+  }
+
   test("rrfFuse combines rankings by reciprocal rank, counts list hits") {
     import spark.implicits._
     // list A: doc 1 first, doc 2 second; list B: doc 2 first, doc 3 second
