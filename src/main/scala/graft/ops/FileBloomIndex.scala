@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.plans.{BloomBuildAgg, BloomBytesContainExpr, BloomKernels}
-import graft.sources.Sources
+import graft.sources.{FileSets, Sources}
 
 /** Per-FILE Bloom sidecar for point lookups on a high-cardinality key
   * — the file-level complement of parquet's native row-group bloom
@@ -19,11 +19,18 @@ import graft.sources.Sources
   * files that might contain the key: O(1 + fpp·files) file opens
   * instead of all of them.
   *
-  * At 100 TB: the sidecar is ~(files × bits/8) bytes — e.g. 100k
-  * files × 1.2 MB bitsets for 1M keys/file at 1% fpp — read once,
-  * cached AS A FRAME in executors, and probed there per lookup
-  * (BloomBytesContainExpr inside a filter); only the surviving file
-  * PATHS reach the driver. The data files are
+  * The sidecar is ~(files × bits/8) bytes. Up to
+  * [[SidecarDriverBytes]] it lives on the DRIVER: a lookup probes
+  * every file's bloom there with [[BloomKernels.mightContainBytes]],
+  * the kernel the executor filter runs, so pruning is identical and
+  * costs no Spark job. A sidecar read as a parquet file scan
+  * (`spark.read.parquet(sidecarPath)`) is loaded once per sidecar
+  * file set and kept in a bounded cache; any other sidecar frame is
+  * collected, capped, per lookup. At 100 TB — e.g. 100k files × 1.2
+  * MB bitsets for 1M keys/file at 1% fpp — the sidecar is past the
+  * budget and is probed in EXECUTORS ([[candidateFilesDF]]), where
+  * the bitsets live; only the surviving file PATHS reach the driver.
+  * The data files are
   * untouched (no rewrite, works on any existing parquet layout);
   * combine with [[graft.functions.ZOrder]] for range predicates and
   * with `parquet.bloom.filter.enabled#col` on write for in-file
@@ -120,10 +127,11 @@ object FileBloomIndex {
   /** The sidecar rows whose bloom might contain ANY of the probe
     * hashes, projected to the file PATH only — the probe runs in
     * EXECUTORS (BloomBytesContainExpr inside the filter), so the
-    * bitsets are tested where they live and never move. At the
-    * scaladoc's 100 TB sizing (100k files × 1.2 MB bitsets) the
-    * driver payload of a collect here is a path list, not the ~120 GB
-    * of bitsets the old collect-then-filter shape shipped per lookup. */
+    * bitsets are tested where they live and never move. This is the
+    * probe of a sidecar past [[SidecarDriverBytes]]: at the object
+    * scaladoc's 100 TB sizing (100k files × 1.2 MB bitsets) the driver
+    * payload of a collect here is a path list, not ~120 GB of
+    * bitsets. */
   def candidateFilesDF(sidecar: DataFrame, keyHashes: Seq[Long]): DataFrame = {
     require(keyHashes.nonEmpty && keyHashes.size <= MaxProbeBatch,
       s"FileBloomIndex.candidateFilesDF: probe batch must be 1..$MaxProbeBatch, " +
@@ -142,26 +150,88 @@ object FileBloomIndex {
   def candidateFiles(sidecar: DataFrame, keyHash: Long): Seq[String] =
     candidateFilesDF(sidecar, Seq(keyHash)).collect().map(_.getString(0)).toSeq
 
-  /** Point lookup: prune files via the executor-side sidecar probe,
-    * then scan only the survivors with the equality filter pushed down
-    * (footer + row-group pruning still apply inside them). Returns an
-    * empty frame (correct schema) when every file is bloom-negative. */
+  /** Point lookup: prune files by the sidecar probe (on the driver
+    * within [[SidecarDriverBytes]], see [[lookupMany]]), then scan
+    * only the survivors with the equality filter pushed down (footer +
+    * row-group pruning still apply inside them). Returns an empty
+    * frame (correct schema) when every file is bloom-negative. */
   def lookup(spark: SparkSession, dataPath: String, sidecar: DataFrame,
              key: Column, value: Any): DataFrame =
     lookupMany(spark, dataPath, sidecar, key, Seq(value))
 
   /** Batch point lookup: ONE projection hashes every probe (cast to
-    * the key column's type — see [[hashAll]]), ONE executor-side
-    * sidecar pass prunes files for the whole batch, ONE scan of the
-    * surviving files with the IN filter pushed down. */
+    * the key column's type — see [[hashAll]]), ONE sidecar probe
+    * prunes files for the whole batch, ONE scan of the surviving files
+    * with the IN filter pushed down. The probe runs on the driver
+    * against the sidecar's (file, bloom, num_hashes) rows when they fit
+    * [[SidecarDriverBytes]] ([[sidecarRows]]); a warm lookup on a
+    * parquet-scan sidecar then starts no job before the data scan.
+    * Past the budget the executor probe [[candidateFilesDF]] runs. */
   def lookupMany(spark: SparkSession, dataPath: String, sidecar: DataFrame,
                  key: Column, values: Seq[Any]): DataFrame = {
     val all = Sources.readParquet(spark, dataPath)
     val keyType = all.select(key).schema.head.dataType
     val hashes = hashAll(spark, values, keyType)
-    val files = candidateFilesDF(sidecar, hashes).collect().map(_.getString(0)).toSeq
+    val files = sidecarRows(spark, sidecar) match {
+      case Some(rows) =>
+        // a NULL bloom or NULL num_hashes prunes the file, as the
+        // executor filter's NULL does
+        rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2) && hashes.exists(h =>
+          BloomKernels.mightContainBytes(r.getAs[Array[Byte]](1), h, r.getInt(2))))
+          .map(_.getString(0)).toSeq
+      case None =>
+        candidateFilesDF(sidecar, hashes).collect().map(_.getString(0)).toSeq
+    }
     if (files.isEmpty) all.filter(lit(false))
     else spark.read.schema(all.schema).parquet(files: _*)
       .filter(key.isin(values: _*))
+  }
+
+  /** Most sidecar bytes (bloom bitsets) a lookup probes on the driver. */
+  final val SidecarDriverBytes: Long = 32L << 20
+
+  /** Most parquet-scan sidecars the driver keeps (least recently used
+    * goes first); an entry is at most [[SidecarDriverBytes]]. */
+  val SidecarCacheEntries = 8
+
+  private val sidecars = new FileSets.Lru[Vector[(String, Long, Long)],
+    Option[Array[Row]]](SidecarCacheEntries)
+
+  /** Drop every cached sidecar (benchmarks call this between timed
+    * runs, next to `Sources.clearSchemaCache()`). */
+  def clearSidecarCache(): Unit = sidecars.clear()
+
+  /** The sidecar's (file, bloom, num_hashes) rows on the driver, or
+    * None past [[SidecarDriverBytes]] of bitsets. A sidecar frame that
+    * is a bare parquet file scan is loaded ONCE per file set: keyed by
+    * the [[FileSets.fingerprint]] of its input files, so a sidecar
+    * rewritten at the same path (new file names) loads again, and a
+    * file set whose parquet bytes already pass the budget is never
+    * loaded. Any other frame is collected, capped, on every call. */
+  private def sidecarRows(spark: SparkSession, sidecar: DataFrame): Option[Array[Row]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    def load(): Option[Array[Row]] =
+      Sources.collectCapped(sidecar.select("file", "bloom", "num_hashes"),
+        SidecarDriverBytes,
+        r => if (r.isNullAt(1)) 0L else r.getAs[Array[Byte]](1).length.toLong)
+    val fileScan = sidecar.queryExecution.analyzed match {
+      case lr: LogicalRelation => lr.relation match {
+        case h: HadoopFsRelation => h.fileFormat.isInstanceOf[ParquetFileFormat]
+        case _ => false
+      }
+      case _ => false
+    }
+    val fp = if (!fileScan) None
+      else FileSets.fingerprint(spark.sessionState.newHadoopConf(),
+        sidecar.inputFiles.toSeq.sorted)
+    fp match {
+      case None => load()
+      case Some(files) => sidecars.get(files).getOrElse {
+        val rows = if (files.map(_._2).sum > SidecarDriverBytes) None else load()
+        sidecars.put(files, rows)
+        rows
+      }
+    }
   }
 }

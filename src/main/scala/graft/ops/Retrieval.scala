@@ -1,10 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
   LongType, ShortType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
+
+import graft.sources.Sources
 
 /** Lexical retrieval over a document corpus — the sparse complement to
   * the dense ANN stack in [[Similarity]] (hybrid retrieval runs both
@@ -92,15 +94,19 @@ object Retrieval {
     * then read the same rows, even when `queries` is
     * non-deterministic (sample()/limit() without an order), and the
     * prune's term set comes from those rows with no second job.
-    * Queries are driver-sized by contract. The collect takes one row
-    * per query (its distinct terms) and explodes on the driver, so
-    * over a local query batch the projection folds into the local
-    * relation and no Spark job runs. Returns (rows frame, rows). */
+    * Queries are driver-sized by contract: more than
+    * [[graft.sources.Sources.QueryBatchCap]] query rows fail loudly.
+    * The collect takes one row per query (its distinct terms) and
+    * explodes on the driver, so over a local query batch the
+    * projection folds into the local relation and no Spark job runs.
+    * `op` names the operator in that failure. Returns (rows frame,
+    * rows). */
   private def collectedQueryTerms(queries: DataFrame, qid: String,
-                                  qtext: String): (DataFrame, Seq[Row]) = {
+                                  qtext: String, op: String): (DataFrame, Seq[Row]) = {
     val terms = array_distinct(toks(col(qtext)))
     val schema = queries.select(col(qid), explode(terms).as("term")).schema
-    val rows = queries.select(col(qid), terms).collect().toSeq.flatMap { r =>
+    val rows = Sources.collectAtMost(queries.select(col(qid), terms),
+        Sources.QueryBatchCap, s"$op: the query batch").toSeq.flatMap { r =>
       Option(r.getSeq[String](1)).getOrElse(Nil).map(t => Row(r.get(0), t))
     }
     (queries.sparkSession.createDataFrame(rows.asJava, schema), rows)
@@ -346,7 +352,7 @@ object Retrieval {
     require(k >= 1, s"bm25TopKIndexed: k must be >= 1 (got $k)")
     require(k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
-    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext)
+    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext, "bm25TopKIndexed")
     indexedTopK(index, stats, id, qterms, qrows, qid, k, k1, b)
   }
 
@@ -399,12 +405,12 @@ object Retrieval {
                          qterms: DataFrame, qrows: Seq[Row], qid: String,
                          k: Int, k1: Double, b: Double): Option[DataFrame] = {
     val spark = tf.sparkSession
-    val cap = PostingsCollectCap
     val postings = tf.select(col(id), col("dl"), col("tf"), col("term"),
       (col("tf") > 0).as("__pos"))
-    val rows = postings.mapPartitions((it: Iterator[Row]) => it.take(cap + 1))(
-      Encoders.row(postings.schema)).collect()
-    if (rows.length > cap) return None
+    val rows = Sources.collectCapped(postings, PostingsCollectCap) match {
+      case Some(rs) => rs
+      case None => return None
+    }
     // document frequency: postings with tf > 0 per term, as scoreAndCut
     // counts them
     val dfc = rows.groupMapReduce(_.getString(3))(r =>
@@ -486,19 +492,15 @@ object Retrieval {
     // driver-collect guard for the two pass-boundary frames (both are
     // (queries × small-constant)-sized BY CONTRACT — the cap turns an
     // over-contract query corpus into a lazy-plan fallback instead of
-    // an unbounded driver collect; probed with limit(cap+1) so the
-    // oversized frame is never pulled in full). Conf-exposed so the
+    // an unbounded driver collect; each task stops after cap + 1 rows
+    // so the oversized frame is never pulled in full). Conf-exposed so the
     // fallback is spec-testable; default comfortably above the
     // thousands-of-queries contract at a few MB of driver rows.
     val prfCap = spark.conf.getOption("spark.graft.prfCollectCap")
       .map(_.toInt).getOrElse(TermInlineCap * 64)
-    def collectCapped(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-      val probe = df.limit(prfCap + 1).collect()
-      if (probe.length <= prfCap) Some(probe) else None
-    }
     require(k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
-    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext)
+    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext, "bm25PrfTopK")
     val first = indexedTopK(index, stats, id, qterms, qrows, qid, fbDocs, k1, b)
     // The feedback-doc list is (queries × fbDocs)-sized: collect it
     // once and replay it as a LITERAL frame. Lazily, `expanded` fed
@@ -511,7 +513,7 @@ object Retrieval {
     // lazy frame broadcasts instead (the pre-literal shape: each
     // consumer re-runs pass 1 — slower, never unbounded driver memory).
     val firstSel = first.select(col(qid), col(id))
-    val (firstFrame, fbScan) = collectCapped(firstSel) match {
+    val (firstFrame, fbScan) = Sources.collectCapped(firstSel, prfCap) match {
       case Some(rows) =>
         val firstLit = spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), firstSel.schema)
@@ -533,7 +535,7 @@ object Retrieval {
         Seq(col("__w").desc, col("term").asc), fbTerms)
       .select(col(qid), col("term"))
     val expanded = qterms.unionByName(topFb).distinct()
-    val expFrame = collectCapped(expanded) match {
+    val expFrame = Sources.collectCapped(expanded, prfCap) match {
       case Some(rows) => spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), expanded.schema)
       case None => expanded

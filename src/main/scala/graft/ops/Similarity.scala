@@ -1507,48 +1507,140 @@ object Similarity {
 
   /** The query-batched IVFADC serve stage over an ALREADY-ENCODED
     * corpus. On the driver: collect the query batch (a local frame
-    * collects without a job), rank each query's nProbe cells and build
-    * its per-(query, cell) LUTs with [[graft.plans.VectorKernels.l2]],
-    * the kernel `L2DistanceExpr` evaluates in-plan, so every value is
-    * bit-identical to the former in-plan probe window and LUT
-    * aggregation. In the plan: ONE scan of the probed cells — an
-    * explicit `list_id IN (...)` filter, which on the
+    * collects without a job; more than
+    * [[graft.sources.Sources.QueryBatchCap]] rows fail loudly), rank
+    * each query's nProbe cells and build its per-(query, cell) LUTs
+    * with [[graft.plans.VectorKernels.l2]], the kernel `L2DistanceExpr`
+    * evaluates in-plan, so every value is bit-identical to the former
+    * in-plan probe window and LUT aggregation. The probed cells are
+    * read through an explicit `list_id IN (...)` filter, which on the
     * [[ivfPqIndexWrite]] artifact (partitioned by list_id) is
-    * DIRECTORY pruning — joined to the broadcast local LUT frame,
-    * map-side ADC, then the GroupedTopK cut. */
+    * DIRECTORY pruning.
+    *
+    * With `driverCap` (the index path, [[ivfPqTopKJoinFromIndex]]),
+    * integral neighbor ids and string or integral query ids, ONE job
+    * collects the probed cells' codes (each task stops after
+    * `driverCap` + 1 rows) and [[ivfPqDriverTopK]] scores them on the
+    * driver into a local frame. Otherwise, or past the cap, the plan
+    * scores lazily: ONE scan of the probed cells joined to the
+    * broadcast local LUT frame, map-side ADC, then the GroupedTopK
+    * cut. [[ivfPqTopKJoin]] always takes the lazy plan: it is the
+    * reference the driver path is checked against. */
   private def ivfPqServeJoin(enc: DataFrame, idCol: String, model: IvfPqModel,
                              queries: DataFrame, qid: String, qvec: String,
-                             k: Int, nProbe: Int): DataFrame = {
+                             k: Int, nProbe: Int,
+                             driverCap: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val q = queries.select(col(qid).as("query_id"),
       col(qvec).cast("array<double>").as("__qv"))
-    val lutRows = q.collect().toSeq.flatMap { r =>
-      val qv = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
-      model.probe(qv, nProbe).map { case (listId, cell) =>
-        Row.fromSeq(r.get(0) +: listId +: model.luts(qv, cell))
+    val probes = graft.sources.Sources.collectAtMost(q,
+        graft.sources.Sources.QueryBatchCap,
+        s"${if (driverCap.isEmpty) "ivfPqTopKJoin" else "ivfPqTopKJoinFromIndex"}: " +
+          "the query batch")
+      .toSeq.flatMap { r =>
+        val qv = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
+        model.probe(qv, nProbe).map { case (listId, cell) =>
+          IvfPqProbe(r.get(0), listId, model.luts(qv, cell))
+        }
       }
+    val probedIds = probes.map(_.listId).distinct.sorted
+    val cells = enc.filter(col("list_id").isin(probedIds: _*))
+    def integral(t: DataType) = t match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
     }
-    val lutSchema = StructType(q.schema.fields.take(1) ++
-      (StructField("list_id", IntegerType, nullable = false) +:
-        (0 until model.m).map(s => StructField(s"__lut_$s",
-          MapType(LongType, DoubleType, valueContainsNull = true)))))
-    val luts = enc.sparkSession.createDataFrame(
-      java.util.Arrays.asList(lutRows: _*), lutSchema)
-    val probedIds = lutRows.map(_.getInt(1)).distinct.sorted
-    val adc = (0 until model.m)
-      .map(s => element_at(col(s"__lut_$s"), col(s"__code_$s")))
-      .reduce(_ + _)
-    val cand = enc.filter(col("list_id").isin(probedIds: _*))
-      .join(broadcast(luts), Seq("list_id"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), adc.as("adc"))
-    val cut = graft.plans.TopK.topKPerGroup(cand, Seq("query_id"),
-      Seq(col("adc").asc, col("neighbor_id")), k)
-    cut.withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adc").asc, col("neighbor_id"))).cast("long"))
-      .select("query_id", "neighbor_id", "adc", "rank")
+    val qidType = q.schema("query_id").dataType
+    val local = driverCap
+      .filter(_ => integral(enc.schema(idCol).dataType) &&
+        (qidType == StringType || integral(qidType)))
+      .flatMap(cap => ivfPqDriverTopK(cells, idCol, model.m, probes,
+        q.schema("query_id"), k, cap))
+    local.getOrElse {
+      val lutSchema = StructType(q.schema.fields.take(1) ++
+        (StructField("list_id", IntegerType, nullable = false) +:
+          (0 until model.m).map(s => StructField(s"__lut_$s",
+            MapType(LongType, DoubleType, valueContainsNull = true)))))
+      val luts = enc.sparkSession.createDataFrame(java.util.Arrays.asList(
+        probes.map(p => Row.fromSeq(p.queryId +: p.listId +: p.luts)): _*), lutSchema)
+      val adc = (0 until model.m)
+        .map(s => element_at(col(s"__lut_$s"), col(s"__code_$s")))
+        .reduce(_ + _)
+      val cand = cells.join(broadcast(luts), Seq("list_id"))
+        .select(col("query_id"), col(idCol).as("neighbor_id"), adc.as("adc"))
+      val cut = graft.plans.TopK.topKPerGroup(cand, Seq("query_id"),
+        Seq(col("adc").asc, col("neighbor_id")), k)
+      cut.withColumn("rank", row_number().over(
+          Window.partitionBy(col("query_id"))
+            .orderBy(col("adc").asc, col("neighbor_id"))).cast("long"))
+        .select("query_id", "neighbor_id", "adc", "rank")
+    }
+  }
+
+  /** One query's probe of one cell: the m per-subspace LUTs
+    * (cid → squared sub-distance) of its residual against that cell. */
+  private final case class IvfPqProbe(queryId: Any, listId: Int,
+                                      luts: Seq[Map[Long, java.lang.Double]])
+
+  /** Most probed-cell code rows [[ivfPqTopKJoinFromIndex]] scores on
+    * the driver; past it the broadcast join of [[ivfPqServeJoin]]
+    * scores. */
+  private val ProbedRowsCap = 100000
+
+  /** The driver path of [[ivfPqServeJoin]]; None past `cap` code rows.
+    * Each (query, code row) of a probed cell scores as the plan scores
+    * it: the m LUT lookups added in subspace order, NULL when a lookup
+    * is NULL (a missing code or a null query vector), as Spark's `+`
+    * propagates it. Each query keeps its k first rows under the
+    * GroupedTopK cut's order (adc ascending nulls first, then
+    * neighbor_id ascending nulls last), and ranks them 1..k by the rank
+    * window's order (neighbor_id nulls first). The result is a local
+    * frame, computed at call time. */
+  private def ivfPqDriverTopK(cells: DataFrame, idCol: String, m: Int,
+                              probes: Seq[IvfPqProbe],
+                              queryField: org.apache.spark.sql.types.StructField,
+                              k: Int, cap: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    import org.apache.spark.sql.types._
+    val codes = cells.select(col("list_id") +: col(idCol) +:
+      (0 until m).map(s => col(s"__code_$s")): _*)
+    graft.sources.Sources.collectCapped(codes, cap).map { rows =>
+      type Cand = (Any, Any, java.lang.Double) // (query_id, neighbor_id, adc)
+      val byCell = probes.groupBy(_.listId)
+      val scored = rows.toSeq.flatMap { r =>
+        byCell.getOrElse(r.getInt(0), Nil).map { p =>
+          val adc = (0 until m).map { s =>
+            if (r.isNullAt(2 + s)) null else p.luts(s).getOrElse(r.getLong(2 + s), null)
+          }.reduce[java.lang.Double]((a, b) => if (a == null || b == null) null else a + b)
+          (p.queryId, r.get(1), adc): Cand
+        }
+      }
+      def order(idNullsFirst: Boolean): Ordering[Cand] = (x: Cand, y: Cand) => {
+        val byAdc = (x._3, y._3) match {
+          case (null, null) => 0
+          case (null, _) => -1
+          case (_, null) => 1
+          case (a, b) => compareDoubles(a, b)
+        }
+        if (byAdc != 0) byAdc
+        else (x._2, y._2) match {
+          case (null, null) => 0
+          case (null, _) => if (idNullsFirst) -1 else 1
+          case (_, null) => if (idNullsFirst) 1 else -1
+          case (a: Number, b: Number) => java.lang.Long.compare(a.longValue, b.longValue)
+        }
+      }
+      val ranked = scored.groupBy(_._1).values.toSeq.flatMap { cs =>
+        cs.sorted(order(idNullsFirst = false)).take(k)
+          .sorted(order(idNullsFirst = true)).zipWithIndex
+          .map { case ((qv, id, adc), i) => Row(qv, id, adc, (i + 1).toLong) }
+      }
+      cells.sparkSession.createDataFrame(java.util.Arrays.asList(ranked: _*),
+        StructType(Seq(queryField, cells.schema(idCol).copy(name = "neighbor_id"),
+          StructField("adc", DoubleType), StructField("rank", LongType, nullable = false))))
+    }
   }
 
   /** Materialize an IVF-PQ index as a warehouse artifact — the 100 TB
@@ -1652,22 +1744,31 @@ object Similarity {
 
   /** Serve a query batch from the materialized index: the centroid and
     * codebook sidecars are loaded to the driver once per index file
-    * set, probes and LUTs are computed on the driver
-    * ([[ivfPqServeJoin]]), and the codes table — its schema resolved
-    * once per file set by [[graft.sources.Sources.readParquet]] — is
-    * scanned ONLY in the probed list_id partitions (directory pruning;
-    * the spec asserts the partition filter reaches the scan). A warm
-    * call runs no schema inference and no sidecar scan: one scan of
-    * the probed cells plus the top-k cut. The query batch is collected
-    * to the driver, so it must be dimension-sized. Results are
-    * bit-identical to [[ivfPqTopKJoin]] over the same corpus and
-    * parameters. */
+    * set, probes and LUTs are computed on the driver, and the codes
+    * table — its schema resolved once per file set by
+    * [[graft.sources.Sources.readParquet]] — is scanned ONLY in the
+    * probed list_id partitions (directory pruning; the spec asserts
+    * the partition filter reaches the scan). When the probed cells
+    * hold at most [[ProbedRowsCap]] code rows, that scan is ONE capped
+    * collect and the driver scores the ADC and cuts the top k
+    * ([[ivfPqServeJoin]]), returning a local frame: a warm call runs
+    * one Spark job. Past the cap the broadcast LUT join scores lazily.
+    * The query batch is collected to the driver, so it must be
+    * dimension-sized. Results are bit-identical to [[ivfPqTopKJoin]]
+    * over the same corpus and parameters. */
   def ivfPqTopKJoinFromIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String, queries: DataFrame, qid: String,
-                             qvec: String, k: Int, nProbe: Int): DataFrame = {
+                             qvec: String, k: Int, nProbe: Int): DataFrame =
+    ivfPqFromIndexCapped(spark, path, queries, qid, qvec, k, nProbe, ProbedRowsCap)
+
+  /** [[ivfPqTopKJoinFromIndex]] with the driver path's row cap given. */
+  private[graft] def ivfPqFromIndexCapped(spark: org.apache.spark.sql.SparkSession,
+                                          path: String, queries: DataFrame,
+                                          qid: String, qvec: String, k: Int,
+                                          nProbe: Int, cap: Int): DataFrame = {
     val ix = ivfPqIndexAt(spark, path)
     val enc = graft.sources.Sources.readParquet(spark, s"$path/codes")
-    ivfPqServeJoin(enc, ix.idCol, ix.model, queries, qid, qvec, k, nProbe)
+    ivfPqServeJoin(enc, ix.idCol, ix.model, queries, qid, qvec, k, nProbe, Some(cap))
   }
 
   // ---- KNN-Shapley data valuation -------------------------------------------

@@ -1429,13 +1429,11 @@ object Sources {
       s"mergeAtomic: delta lacks payload columns ${missingCols.mkString(", ")} " +
         "— upserts are whole-row (the CDC-feed contract)")
     // 1. the delta, collected once in the table's types
-    val rows = changes.select(payloadCols.map(c => fnCol(c).cast(types(c)).as(c)) :+
-        fnCol(op).cast(StringType): _*)
-      .limit(MergeDeltaCap + 1).collect()
-    require(rows.length <= MergeDeltaCap,
-      s"mergeAtomic: the delta holds more than $MergeDeltaCap rows " +
-        "(MergeDeltaCap) — merge it in smaller batches, or rewrite the " +
-        "table with Snapshot.applyChangesAtomic")
+    val rows = collectAtMost(
+      changes.select(payloadCols.map(c => fnCol(c).cast(types(c)).as(c)) :+
+        fnCol(op).cast(StringType): _*), MergeDeltaCap,
+      "mergeAtomic: the delta (MergeDeltaCap — merge it in smaller batches, " +
+        "or rewrite the table with Snapshot.applyChangesAtomic)")
     // 2. validation on the driver
     val opAt = payloadCols.length
     val keyAt = payloadCols.indexOf(id)
@@ -1453,9 +1451,9 @@ object Sources {
     val keys = rows.map(_.get(keyAt)).filter(_ != null).toSeq
     val hits =
       if (keys.isEmpty) Array.empty[(String, Any)]
-      else collectCapped(base.filter(fnCol(id).isin(keys: _*))
-          .select(input_file_name(), fnCol(id)), "mergeAtomic: table rows " +
-          "holding the delta's keys")
+      else collectAtMost(base.filter(fnCol(id).isin(keys: _*))
+          .select(input_file_name(), fnCol(id)), MergeDeltaCap,
+          "mergeAtomic: table rows holding the delta's keys (MergeDeltaCap)")
         .map(r => (new Path(r.getString(0)).getName, r.get(1)))
     val matched = hits.groupBy(h => normalizedKey(h._2))
     val ups = rows.filter(_.getString(opAt) == "upsert")
@@ -1500,18 +1498,48 @@ object Sources {
     case other => other
   }
 
-  /** Collect `df` in ONE job, failing loudly past [[MergeDeltaCap]]
-    * rows: each task stops after the cap + 1st row, so the driver
-    * receives at most that many rows per partition (`limit` would plan
-    * Spark's incremental take, which runs a job per round). */
-  private def collectCapped(df: DataFrame, what: String):
-      Array[org.apache.spark.sql.Row] = {
-    val cap = MergeDeltaCap
-    val got = df.mapPartitions((it: Iterator[org.apache.spark.sql.Row]) =>
-      it.take(cap + 1))(org.apache.spark.sql.Encoders.row(df.schema)).collect()
-    require(got.length <= cap, s"$what: more than $cap rows (MergeDeltaCap)")
-    got
+  /** Collect `df` to the driver unless its rows weigh more than `cap`
+    * in total; by default every row weighs 1, so `cap` counts rows.
+    * A frame that folds to a local relation collects with no job.
+    * Otherwise ONE job runs, and each task stops at the first row that
+    * takes its running weight past the cap (with unit weights, after
+    * cap + 1 rows), so the driver receives at most that much per
+    * partition. `limit` would plan Spark's incremental take, which can
+    * run a job per round. None past the cap. */
+  private[graft] def collectCapped(df: DataFrame, cap: Long,
+                                   weight: org.apache.spark.sql.Row => Long = _ => 1L):
+      Option[Array[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation}
+    // the leaf test first: a frame over files is not optimized twice
+    val qe = df.queryExecution
+    val got =
+      if (qe.analyzed.collectLeaves().forall {
+            case _: LocalRelation | _: OneRowRelation => true
+            case _ => false
+          } && qe.optimizedPlan.isInstanceOf[LocalRelation])
+        df.collect()
+      else df.mapPartitions { (it: Iterator[Row]) =>
+        var w = 0L
+        it.takeWhile { r => val under = w <= cap; w += weight(r); under }
+      }(org.apache.spark.sql.Encoders.row(df.schema)).collect()
+    if (got.iterator.map(weight).sum <= cap) Some(got) else None
   }
+
+  /** [[collectCapped]] counting rows, failing loudly past `cap`: for
+    * the collects whose callers have no other plan (a merge delta's
+    * table hits, a serving operator's query batch). `what` names the
+    * operator and the rows in the message. */
+  private[graft] def collectAtMost(df: DataFrame, cap: Int, what: String):
+      Array[org.apache.spark.sql.Row] = {
+    val got = collectCapped(df, cap)
+    require(got.isDefined, s"$what: more than $cap rows")
+    got.get
+  }
+
+  /** Most query rows a serving operator collects to the driver (the
+    * query batch is dimension-sized by contract). */
+  private[graft] val QueryBatchCap = 100000
 
   /** File-grain CHANGES between two manifest versions: (added,
     * removed) file names, `toVersion` relative to `fromVersion`. The

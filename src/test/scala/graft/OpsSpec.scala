@@ -3099,9 +3099,26 @@ class OpsSpec extends SparkTestBase {
     val full = new java.io.File(dir, "full").getPath
     Similarity.ivfPqIndexWrite(e, "vec_id", "embedding", dims = 16,
       nLists = 6, m = 4, ksub = 4, iters = 1, path = full)
-    // serve-from-artifact is bit-identical to the in-plan chain
-    val fromIdx = Similarity.ivfPqTopKJoinFromIndex(spark, full,
-      e.filter(col("vec_id") < 3), "vec_id", "embedding", k = 8, nProbe = 1)
+    // serve-from-artifact is bit-identical to the in-plan chain; the
+    // executed plans of the queries it runs are captured for the
+    // directory-pruning check below
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      override def onFailure(fn: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val fromIdx =
+      try Similarity.ivfPqTopKJoinFromIndex(spark, full,
+        e.filter(col("vec_id") < 3), "vec_id", "embedding", k = 8, nProbe = 1)
+      finally {
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
     val inPlan = Similarity.ivfPqTopKJoin(e, "vec_id", "embedding", dims = 16,
       nLists = 6, nProbe = 1, m = 4, ksub = 4, iters = 1,
       queries = e.filter(col("vec_id") < 3), qid = "vec_id",
@@ -3111,11 +3128,13 @@ class OpsSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
     assert(rows(fromIdx) == rows(inPlan),
       "serve-from-artifact must equal the in-plan chain bit for bit")
-    // the probe filter reaches the scan as a PARTITION filter —
-    // non-probed list_id directories are never read
-    val plan = fromIdx.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [list_id"),
-      s"probe filter must prune list_id directories:\n${plan.take(2000)}")
+    // the probe filter reaches the scan of the probed cells' codes as a
+    // PARTITION filter — non-probed list_id directories are never read
+    val codeScans = plans.toArray(Array.empty[String]).toSeq
+      .filter(_.contains("__code_0"))
+    assert(codeScans.nonEmpty, s"no scan of the codes table ran:\n$plans")
+    codeScans.foreach(plan => assert(plan.contains("PartitionFilters: [list_id"),
+      s"probe filter must prune list_id directories:\n${plan.take(2000)}"))
     // day-2: index trained on evens, odds appended against the STORED
     // centroids/codebooks == one-shot encode of everything with the
     // same even-trained artifacts

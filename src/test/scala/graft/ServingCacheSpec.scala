@@ -110,7 +110,53 @@ class ServingCacheSpec extends SparkTestBase {
     assert(after != inPlan(a))
   }
 
-  test("job budgets: ivfPqTopKJoinFromIndex <= 3, lookupMany <= 2 past the sidecar read") {
+  /** (query id, neighbor id, adc bits, rank) rows in (query id, rank)
+    * order: the bit-identity view of an IVF-PQ answer. */
+  private def bits(df: DataFrame) =
+    df.collect().map { r =>
+      (String.valueOf(r.get(0)), r.get(1),
+        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2))),
+        r.getLong(3))
+    }.sortBy(r => (r._1, r._4)).toSeq
+
+  test("ivfPqTopKJoinFromIndex scores on the driver, bit-identical to ivfPqTopKJoin") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // rows 60..79 repeat the vectors of rows 0..19: equal codes, equal
+    // adc, so the cut and the ranks break ties by neighbor id
+    val base = embeddings(41)
+    val e = base.union(base.filter(col("vec_id") < 20)
+      .withColumn("vec_id", col("vec_id") + 60))
+    val path = s"${tmp("graft_ivfpq_driver")}/idx"
+    Similarity.ivfPqIndexWrite(e, "vec_id", "embedding", dims = 16,
+      nLists = 6, m = 4, ksub = 4, iters = 1, path = path)
+    // string query ids, and one query with a null vector
+    val queries = e.filter(col("vec_id") < 4)
+      .select(concat(lit("q"), col("vec_id")).as("qid"), col("embedding").as("qv"))
+      .union(spark.sql("SELECT 'qnull' AS qid, CAST(NULL AS ARRAY<DOUBLE>) AS qv"))
+    def inPlan(k: Int) = Similarity.ivfPqTopKJoin(e, "vec_id", "embedding",
+      dims = 16, nLists = 6, nProbe = 2, m = 4, ksub = 4, iters = 1,
+      queries = queries, qid = "qid", qvec = "qv", k = k)
+    def served(k: Int, cap: Int) = Similarity.ivfPqFromIndexCapped(spark, path,
+      queries, "qid", "qv", k, nProbe = 2, cap)
+    // k = 100 is more than the whole 80-row corpus, so more than any
+    // query's candidates
+    Seq(5, 100).foreach { k =>
+      val driver = served(k, 100000)
+      assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        "within the cap the answer is a local frame")
+      val want = bits(inPlan(k))
+      assert(want.exists(_._3.isEmpty) && want.exists(_._3.nonEmpty))
+      assert(bits(driver) == want, s"k=$k: driver path != ivfPqTopKJoin")
+      // past the cap the broadcast join scores, with the same answer
+      val pastCap = served(k, 3)
+      assert(!pastCap.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(bits(pastCap) == want, s"k=$k: past-cap path != ivfPqTopKJoin")
+    }
+    val ties = bits(inPlan(100)).groupBy(r => (r._1, r._3)).values.filter(_.size > 1)
+    assert(ties.nonEmpty, "the duplicated vectors must tie on adc")
+  }
+
+  test("job budgets: ivfPqTopKJoinFromIndex <= 1, lookupMany <= 1 past the sidecar read") {
     val e = embeddings(41)
     val idx = s"${tmp("graft_ivfpq_budget")}/idx"
     Similarity.ivfPqIndexWrite(e, "vec_id", "embedding", dims = 16,
@@ -121,7 +167,7 @@ class ServingCacheSpec extends SparkTestBase {
       "vec_id", "embedding", k = 5, nProbe = 2).collect()
     ivf()
     val ivfJobs = jobsDuring(ivf())
-    assert(ivfJobs <= 3, s"warm IVF-PQ serve + collect: $ivfJobs jobs")
+    assert(ivfJobs <= 1, s"warm IVF-PQ serve + collect: $ivfJobs jobs")
 
     import spark.implicits._
     val data = s"${tmp("graft_fbloom_budget")}/d"
@@ -133,8 +179,70 @@ class ServingCacheSpec extends SparkTestBase {
     assert(lookup().map(_.getLong(1)).sorted.toSeq == Seq(15L, 231L))
     val sidecarJobs = jobsDuring(spark.read.parquet(side))
     val lookupJobs = jobsDuring(lookup())
-    assert(lookupJobs - sidecarJobs <= 2,
+    assert(lookupJobs - sidecarJobs <= 1,
       s"warm lookupMany + collect: $lookupJobs jobs, $sidecarJobs for the sidecar read")
+  }
+
+  test("lookupMany loads a parquet sidecar once and follows a rewrite at the same path") {
+    import spark.implicits._
+    val dir = tmp("graft_fbloom_cache")
+    val data = s"$dir/d"
+    def write(mult: Long): String = {
+      (0L until 1000L).map(i => (i, i * mult)).toDF("k", "v")
+        .repartition(6, col("k")).write.mode("overwrite").parquet(data)
+      FileBloomIndex.writeSidecar(spark, data, col("k"), 300L)
+    }
+    def lookup(side: org.apache.spark.sql.DataFrame) =
+      FileBloomIndex.lookupMany(spark, data, side, col("k"), Seq(7L, 500L, 4000L))
+    def values(side: org.apache.spark.sql.DataFrame) =
+      lookup(side).collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val sidePath = write(2L)
+    val side = spark.read.parquet(sidePath)
+    assert(values(side) == Seq((7L, 14L), (500L, 1000L)))
+    val again = jobsDuring(lookup(side))
+    assert(again == 0, s"a repeat lookup on an unchanged sidecar ran $again jobs")
+    // rewritten in place: new file names, so the sidecar loads again
+    write(3L)
+    assert(values(spark.read.parquet(sidePath)) == Seq((7L, 21L), (500L, 1500L)),
+      "the rewritten sidecar and data must be served")
+  }
+
+  test("lookupMany over a non-file sidecar frame probes the same files as the executors") {
+    import spark.implicits._
+    val data = s"${tmp("graft_fbloom_frame")}/d"
+    (0L until 1000L).map(i => (i, i * 2L)).toDF("k", "v")
+      .repartition(8, col("k")).write.parquet(data)
+    val side = FileBloomIndex.build(spark, data, col("k"), 200L)
+    val keys = Seq(3L, 250L, 999L, 123456L)
+    val out = FileBloomIndex.lookupMany(spark, data, side, col("k"), keys)
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 250L, 999L))
+    val probed = FileBloomIndex.candidateFilesDF(side,
+      FileBloomIndex.hashAll(spark, keys, LongType)).collect().map(_.getString(0))
+    def paths(fs: Seq[String]) = fs.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).sorted
+    assert(probed.nonEmpty && paths(out.inputFiles.toSeq) == paths(probed.toSeq))
+  }
+
+  test("a serving query batch past QueryBatchCap fails loudly, naming the operator") {
+    import spark.implicits._
+    val dir = tmp("graft_query_cap")
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+    Retrieval.invertedIndex(docs, "doc_id", "text").write.parquet(s"$dir/postings")
+    val big = spark.range(Sources.QueryBatchCap + 1L)
+    val bm25 = intercept[IllegalArgumentException] {
+      Retrieval.bm25TopKIndexed(spark.read.parquet(s"$dir/postings"),
+        Retrieval.corpusStatsOf(docs, "text"), "doc_id",
+        big.select(col("id").as("q_id"), lit("alpha").as("qtext")), "q_id", "qtext")
+    }
+    assert(bm25.getMessage.contains("bm25TopKIndexed: the query batch"), bm25.getMessage)
+    val e = embeddings(41)
+    Similarity.ivfPqIndexWrite(e, "vec_id", "embedding", dims = 16,
+      nLists = 6, m = 4, ksub = 4, iters = 1, path = s"$dir/ivf")
+    val ivf = intercept[IllegalArgumentException] {
+      Similarity.ivfPqTopKJoinFromIndex(spark, s"$dir/ivf",
+        big.select(col("id").as("vec_id"), array_repeat(lit(1.0), 16).as("embedding")),
+        "vec_id", "embedding", k = 3, nProbe = 1)
+    }
+    assert(ivf.getMessage.contains("ivfPqTopKJoinFromIndex: the query batch"), ivf.getMessage)
   }
 
   test("FileBloomIndex hashes fold on the driver: no job, same checks") {
