@@ -2477,10 +2477,9 @@ object QueriesOps {
     // per-file bloom sidecar lookup (SURVEY §2.9 row 97): orders
     // key-spread over 16 files ONCE per session (content-tagged cache,
     // so footer min/max prunes nothing), sidecar built in one grouped
-    // pass, then a BATCH point lookup collects the (capped) sidecar,
-    // probes the bitsets on the driver with the kernel
-    // BloomBytesContainExpr runs, and scans only the bloom-positive
-    // files — the oracle is the plain filtered scan,
+    // pass, then a BATCH point lookup probes the bitsets IN EXECUTORS
+    // (BloomBytesContainExpr; paths-only driver payload) and scans only
+    // the bloom-positive files — the oracle is the plain filtered scan,
     // proving the index layer is answer-preserving
     "x_filebloom" -> ((s, d) => {
       val path = s"target/fbloomcache/orders_${srcTag(d, "orders")}"

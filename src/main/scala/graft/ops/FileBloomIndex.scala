@@ -25,11 +25,11 @@ import graft.sources.{FileSets, Sources}
   * the kernel the executor filter runs, so pruning is identical and
   * costs no Spark job. A sidecar read as a parquet file scan
   * (`spark.read.parquet(sidecarPath)`) is loaded once per sidecar
-  * file set and kept in a bounded cache; any other sidecar frame is
-  * collected, capped, per lookup. At 100 TB — e.g. 100k files × 1.2
-  * MB bitsets for 1M keys/file at 1% fpp — the sidecar is past the
-  * budget and is probed in EXECUTORS ([[candidateFilesDF]]), where
-  * the bitsets live; only the surviving file PATHS reach the driver.
+  * file set and kept in a cache bounded by the same byte budget. Any
+  * other sidecar frame (e.g. [[build]]'s output), and at 100 TB — e.g.
+  * 100k files × 1.2 MB bitsets for 1M keys/file at 1% fpp — any
+  * sidecar, is probed in EXECUTORS ([[candidateFilesDF]]), where the
+  * bitsets live; only the surviving file PATHS reach the driver.
   * The data files are
   * untouched (no rewrite, works on any existing parquet layout);
   * combine with [[graft.functions.ZOrder]] for range predicates and
@@ -128,7 +128,8 @@ object FileBloomIndex {
     * hashes, projected to the file PATH only — the probe runs in
     * EXECUTORS (BloomBytesContainExpr inside the filter), so the
     * bitsets are tested where they live and never move. This is the
-    * probe of a sidecar past [[SidecarDriverBytes]]: at the object
+    * probe of a sidecar that is not a parquet file scan or is past
+    * [[SidecarDriverBytes]]: at the object
     * scaladoc's 100 TB sizing (100k files × 1.2 MB bitsets) the driver
     * payload of a collect here is a path list, not ~120 GB of
     * bitsets. */
@@ -163,10 +164,10 @@ object FileBloomIndex {
     * the key column's type — see [[hashAll]]), ONE sidecar probe
     * prunes files for the whole batch, ONE scan of the surviving files
     * with the IN filter pushed down. The probe runs on the driver
-    * against the sidecar's (file, bloom, num_hashes) rows when they fit
-    * [[SidecarDriverBytes]] ([[sidecarRows]]); a warm lookup on a
-    * parquet-scan sidecar then starts no job before the data scan.
-    * Past the budget the executor probe [[candidateFilesDF]] runs. */
+    * against a parquet-scan sidecar's (file, bloom, num_hashes) rows
+    * when they fit [[SidecarDriverBytes]] ([[sidecarRows]]); a warm
+    * lookup then starts no job before the data scan. Otherwise the
+    * executor probe [[candidateFilesDF]] runs. */
   def lookupMany(spark: SparkSession, dataPath: String, sidecar: DataFrame,
                  key: Column, values: Seq[Any]): DataFrame = {
     val all = Sources.readParquet(spark, dataPath)
@@ -187,34 +188,38 @@ object FileBloomIndex {
       .filter(key.isin(values: _*))
   }
 
-  /** Most sidecar bytes (bloom bitsets) a lookup probes on the driver. */
+  /** Most sidecar bytes (bloom bitsets) a lookup probes on the driver,
+    * and most the driver keeps across every cached sidecar. */
   final val SidecarDriverBytes: Long = 32L << 20
 
   /** Most parquet-scan sidecars the driver keeps (least recently used
-    * goes first); an entry is at most [[SidecarDriverBytes]]. */
+    * goes first), within [[SidecarDriverBytes]] of bitsets in all. */
   val SidecarCacheEntries = 8
 
+  private def bloomBytes(r: Row): Long =
+    if (r.isNullAt(1)) 0L else r.getAs[Array[Byte]](1).length.toLong
+
   private val sidecars = new FileSets.Lru[Vector[(String, Long, Long)],
-    Option[Array[Row]]](SidecarCacheEntries)
+    Option[Array[Row]]](SidecarCacheEntries, SidecarDriverBytes,
+    _.fold(0L)(_.iterator.map(bloomBytes).sum))
 
   /** Drop every cached sidecar (benchmarks call this between timed
     * runs, next to `Sources.clearSchemaCache()`). */
   def clearSidecarCache(): Unit = sidecars.clear()
 
   /** The sidecar's (file, bloom, num_hashes) rows on the driver, or
-    * None past [[SidecarDriverBytes]] of bitsets. A sidecar frame that
-    * is a bare parquet file scan is loaded ONCE per file set: keyed by
+    * None when the probe belongs in executors. Only a sidecar frame that
+    * is a bare parquet file scan is loaded, ONCE per file set: keyed by
     * the [[FileSets.fingerprint]] of its input files, so a sidecar
-    * rewritten at the same path (new file names) loads again, and a
-    * file set whose parquet bytes already pass the budget is never
-    * loaded. Any other frame is collected, capped, on every call. */
+    * rewritten at the same path (new file names) loads again. A file
+    * set whose parquet bytes pass [[SidecarDriverBytes]] is never
+    * loaded; the load reads every file in ONE task, so the byte cap
+    * bounds the whole collect (bitsets compress, so file bytes alone
+    * do not). Any other frame is None: its size is unknown until it
+    * runs, and probing it in executors costs the same one job. */
   private def sidecarRows(spark: SparkSession, sidecar: DataFrame): Option[Array[Row]] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    def load(): Option[Array[Row]] =
-      Sources.collectCapped(sidecar.select("file", "bloom", "num_hashes"),
-        SidecarDriverBytes,
-        r => if (r.isNullAt(1)) 0L else r.getAs[Array[Byte]](1).length.toLong)
     val fileScan = sidecar.queryExecution.analyzed match {
       case lr: LogicalRelation => lr.relation match {
         case h: HadoopFsRelation => h.fileFormat.isInstanceOf[ParquetFileFormat]
@@ -225,13 +230,13 @@ object FileBloomIndex {
     val fp = if (!fileScan) None
       else FileSets.fingerprint(spark.sessionState.newHadoopConf(),
         sidecar.inputFiles.toSeq.sorted)
-    fp match {
-      case None => load()
-      case Some(files) => sidecars.get(files).getOrElse {
-        val rows = if (files.map(_._2).sum > SidecarDriverBytes) None else load()
-        sidecars.put(files, rows)
-        rows
-      }
-    }
+    fp.flatMap(files => sidecars.get(files).getOrElse {
+      val rows =
+        if (files.map(_._2).sum > SidecarDriverBytes) None
+        else Sources.collectCapped(sidecar.select("file", "bloom", "num_hashes")
+          .coalesce(1), SidecarDriverBytes, bloomBytes)
+      sidecars.put(files, rows)
+      rows
+    })
   }
 }

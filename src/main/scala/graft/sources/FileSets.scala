@@ -45,14 +45,27 @@ private[graft] object FileSets {
       name.endsWith("._COPYING_")) &&
       !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
 
-  /** A bounded least-recently-used map, safe to share across threads. */
-  final class Lru[K, V](bound: Int) {
-    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        size() > bound
-    }
+  /** A bounded least-recently-used map, safe to share across threads:
+    * at most `bound` entries and at most `maxWeight` of summed
+    * `weight` (the least recently used go first; an entry heavier than
+    * `maxWeight` on its own is not kept, and evicts nothing). */
+  final class Lru[K, V](bound: Int, maxWeight: Long = Long.MaxValue,
+                        weight: V => Long = (_: V) => 0L) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+    private var total = 0L
     def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
-    def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
-    def clear(): Unit = m.synchronized(m.clear())
+    def put(k: K, v: V): Unit = m.synchronized {
+      Option(m.remove(k)).foreach(old => total -= weight(old))
+      if (weight(v) <= maxWeight) {
+        m.put(k, v)
+        total += weight(v)
+        // `k` is now the most recently used, so it is never the one to go
+        val eldest = m.values.iterator
+        while (m.size > bound || total > maxWeight) {
+          total -= weight(eldest.next()); eldest.remove()
+        }
+      }
+    }
+    def clear(): Unit = m.synchronized { m.clear(); total = 0L }
   }
 }

@@ -1503,9 +1503,11 @@ object Sources {
     * A frame that folds to a local relation collects with no job.
     * Otherwise ONE job runs, and each task stops at the first row that
     * takes its running weight past the cap (with unit weights, after
-    * cap + 1 rows), so the driver receives at most that much per
-    * partition. `limit` would plan Spark's incremental take, which can
-    * run a job per round. None past the cap. */
+    * cap + 1 rows). The bound on the driver is PER PARTITION: up to
+    * partitions × (cap + one row) arrive before the sum is checked, so
+    * a caller that needs a total bound collects one partition. `limit`
+    * would plan Spark's incremental take, which can run a job per
+    * round. None past the cap. */
   private[graft] def collectCapped(df: DataFrame, cap: Long,
                                    weight: org.apache.spark.sql.Row => Long = _ => 1L):
       Option[Array[org.apache.spark.sql.Row]] = {

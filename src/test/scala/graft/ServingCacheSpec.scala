@@ -222,6 +222,21 @@ class ServingCacheSpec extends SparkTestBase {
     assert(probed.nonEmpty && paths(out.inputFiles.toSeq) == paths(probed.toSeq))
   }
 
+  test("FileSets.Lru keeps its entry bound and its weight bound, least recently used first") {
+    val lru = new graft.sources.FileSets.Lru[String, Long](3, 10L, identity)
+    lru.put("a", 4L); lru.put("b", 4L)
+    lru.get("a")
+    lru.put("c", 4L) // 12 > 10: "b", the least recently used, goes
+    assert(lru.get("b").isEmpty && lru.get("a").contains(4L) && lru.get("c").contains(4L))
+    lru.put("a", 1L); lru.put("d", 1L); lru.put("e", 1L) // 4 entries > 3: "c" goes
+    assert(lru.get("c").isEmpty && Seq("a", "d", "e").forall(lru.get(_).isDefined))
+    lru.put("big", 11L) // heavier than the bound on its own: not kept, evicts nothing
+    assert(lru.get("big").isEmpty && Seq("a", "d", "e").forall(lru.get(_).isDefined))
+    val byCount = new graft.sources.FileSets.Lru[Int, Int](2)
+    (1 to 3).foreach(i => byCount.put(i, i))
+    assert(byCount.get(1).isEmpty && byCount.get(3).contains(3))
+  }
+
   test("a serving query batch past QueryBatchCap fails loudly, naming the operator") {
     import spark.implicits._
     val dir = tmp("graft_query_cap")
