@@ -619,9 +619,7 @@ object Bench {
         graft.functions.ScanFns.unpersistScans()
         // each timed run resolves parquet schemas and IVF-PQ and
         // FileBloom sidecars itself, like the first one did
-        graft.sources.Sources.clearSchemaCache()
-        graft.ops.Similarity.clearIndexCache()
-        graft.ops.FileBloomIndex.clearSidecarCache()
+        graft.sources.FileSets.clearCaches()
         // drop any remaining cached relations + broadcast/GC residue:
         // r10's judge measured x_bitext 17x slower WITHIN the 37-query
         // bench than standalone with an unchanged plan — late-bench

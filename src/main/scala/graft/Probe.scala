@@ -81,9 +81,7 @@ object Probe {
         graft.functions.ScanFns.unpersistScans()
         // cached parquet schemas and IVF-PQ and FileBloom sidecars would
         // make every run after the first skip work the first one paid for
-        graft.sources.Sources.clearSchemaCache()
-        graft.ops.Similarity.clearIndexCache()
-        graft.ops.FileBloomIndex.clearSidecarCache()
+        graft.sources.FileSets.clearCaches()
         // same per-run hygiene as Bench.time1: operators that persist
         // within-query frames (e.g. dedupClusters' partitioned edge
         // cache) must not leak a warm cache into the next timed run

@@ -33,8 +33,14 @@ object QueriesOps {
     * a one-row broadcast frame, so no driver-side action fires during
     * plan construction. */
   private def queryFrame(s: SparkSession, d: String): DataFrame =
+    queryRow(s, d).select(col("embedding").cast("array<double>").as("qv"))
+
+  /** The single-query ANN queries' query: corpus vector 0, searched
+    * through the batched retrievals with its own id as the query id (a
+    * literal id would be optimized out of the per-query window's
+    * partitioning, leaving an unpartitioned window). */
+  private def queryRow(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings").filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>").as("qv"))
 
   /** Deterministic wide-dim embedding fixture: replicate the 64-dim
     * vector `reps` times with block r scaled by 1/(r+1) — every block
@@ -339,9 +345,9 @@ object QueriesOps {
     // DuckDB oracle recomputes the exact bucket assignment and replays
     // the same multi-probe retrieval
     "x_ann_lsh" -> ((s, d) =>
-      Similarity.lshTopKFrame(t(s, d, "embeddings"), "vec_id", "embedding",
-        queryFrame(s, d), k = 10, nPlanes = 8)
-        .withColumn("cos", round(col("cos"), 4))
+      Similarity.lshTopKJoin(t(s, d, "embeddings"), "vec_id", "embedding",
+          queryRow(s, d), "vec_id", "embedding", k = 10, nPlanes = 8)
+        .select(col("neighbor_id").as("vec_id"), round(col("cos"), 4).as("cos"))
         .orderBy(col("cos").desc, col("vec_id"))),
 
     // hubness audit over the LSH self-retrieval: every 10th vector
@@ -362,9 +368,9 @@ object QueriesOps {
     // repo is 64-dim)
     "x_ann_lsh_768" -> ((s, d) => {
       val e = embeddings768(s, d)
-      val q = e.filter(col("vec_id") === 0).select(col("embedding768").as("qv"))
-      Similarity.lshTopKFrame(e, "vec_id", "embedding768", q, k = 10, nPlanes = 8)
-        .withColumn("cos", round(col("cos"), 4))
+      Similarity.lshTopKJoin(e, "vec_id", "embedding768",
+          e.filter(col("vec_id") === 0), "vec_id", "embedding768", k = 10, nPlanes = 8)
+        .select(col("neighbor_id").as("vec_id"), round(col("cos"), 4).as("cos"))
         .orderBy(col("cos").desc, col("vec_id"))
     }),
 
@@ -433,9 +439,9 @@ object QueriesOps {
       val (assigned, centroids) =
         Similarity.ivfIndexDeterministic(t(s, d, "embeddings"), "vec_id", "embedding",
           nLists = 8)
-      Similarity.ivfTopKFrame(assigned, centroids, "vec_id", "embedding",
-        queryFrame(s, d), k = 10, nprobe = 2)
-        .withColumn("cos", round(col("cos"), 4))
+      Similarity.ivfTopKJoin(assigned, centroids, "vec_id", "embedding",
+          queryRow(s, d), "vec_id", "embedding", k = 10, nprobe = 2)
+        .select(col("neighbor_id").as("vec_id"), round(col("cos"), 4).as("cos"))
         .orderBy(col("cos").desc, col("vec_id"))
     }),
 

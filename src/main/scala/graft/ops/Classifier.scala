@@ -490,13 +490,9 @@ object Classifier {
     // Catalyst re-analyzes an exponentially growing tree and 15
     // rounds never finish planning. Pair table and per-round ratings
     // are materialized; state is items-sized, pairs pair-sized.
-    val sc = matches.sparkSession.sparkContext
-    def cp(df: DataFrame): DataFrame =
-      if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    val pairsM = cp(pairs)
+    val pairsM = Materialize.cp(pairs)
     val items = pairsM.select(col("a").as("item")).distinct()
-    val base = cp(items.join(wins, Seq("item"), "left")
+    val base = Materialize.cp(items.join(wins, Seq("item"), "left")
       .select(col("item"), coalesce(col("__W"), lit(0.0)).as("__W")))
     var r = base.withColumn("rating", lit(1.0))
     for (_ <- 1 to iters) {
@@ -511,7 +507,7 @@ object Classifier {
             .otherwise(lit(0.0)).as("rating"))
       val tot = unnorm.agg(gridSum40(col("rating")).as("__t"),
         count(lit(1)).cast("double").as("__c"))
-      r = cp(unnorm.crossJoin(broadcast(tot))
+      r = Materialize.cp(unnorm.crossJoin(broadcast(tot))
         .select(col("item"), col("__W"),
           (col("rating") * col("__c") / col("__t")).as("rating")))
     }
@@ -554,16 +550,12 @@ object Classifier {
     val rk0 = rankings.select(col(group).cast("string").as("__g"),
         col(item).cast("string").as("__i"), col(pos).cast("long").as("__p"))
       .filter(col("__g").isNotNull && col("__i").isNotNull && col("__p").isNotNull)
-    val sc = rankings.sparkSession.sparkContext
-    def cp(df: DataFrame): DataFrame =
-      if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
     val byG = Window.partitionBy("__g")
-    val rk = cp(rk0.withColumn("__mx", max("__p").over(byG)))
+    val rk = Materialize.cp(rk0.withColumn("__mx", max("__p").over(byG)))
     val wins = rk.filter(col("__p") < col("__mx"))
       .groupBy(col("__i").as("item")).agg(count(lit(1)).cast("double").as("__W"))
     val items = rk.select(col("__i").as("item")).distinct()
-    val base = cp(items.join(wins, Seq("item"), "left")
+    val base = Materialize.cp(items.join(wins, Seq("item"), "left")
       .select(col("item"), coalesce(col("__W"), lit(0.0)).as("__W")))
     val suffix = byG.orderBy(col("__p").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -585,7 +577,7 @@ object Classifier {
             .otherwise(lit(0.0)).as("rating"))
       val tot = unnorm.agg(gridSum40(col("rating")).as("__t"),
         count(lit(1)).cast("double").as("__c"))
-      r = cp(unnorm.crossJoin(broadcast(tot))
+      r = Materialize.cp(unnorm.crossJoin(broadcast(tot))
         .select(col("item"), col("__W"),
           (col("rating") * col("__c") / col("__t")).as("rating")))
     }

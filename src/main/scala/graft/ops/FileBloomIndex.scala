@@ -203,10 +203,6 @@ object FileBloomIndex {
     Option[Array[Row]]](SidecarCacheEntries, SidecarDriverBytes,
     _.fold(0L)(_.iterator.map(bloomBytes).sum))
 
-  /** Drop every cached sidecar (benchmarks call this between timed
-    * runs, next to `Sources.clearSchemaCache()`). */
-  def clearSidecarCache(): Unit = sidecars.clear()
-
   /** The sidecar's (file, bloom, num_hashes) rows on the driver, or
     * None when the probe belongs in executors. Only a sidecar frame that
     * is a bare parquet file scan is loaded, ONCE per file set: keyed by

@@ -357,13 +357,9 @@ object Graph {
     // mode, the dedupClusters convention) instead of re-evaluating the
     // caller's subtree (labels is often a multi-iteration LPA plan)
     // per reference
-    val sc = edges.sparkSession.sparkContext
-    def cp(df: DataFrame): DataFrame =
-      if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    val e = cp(undirected(edges, src, dst))
+    val e = Materialize.cp(undirected(edges, src, dst))
     val m = e.count()
-    val lab = cp(labels.select(col(node).as("__n"), col(label).as("__c")))
+    val lab = Materialize.cp(labels.select(col(node).as("__n"), col(label).as("__c")))
     val deg = e.select(col("__a").as("__n"))
       .unionByName(e.select(col("__b").as("__n")))
       .groupBy("__n").agg(count(lit(1)).as("__deg"))

@@ -56,22 +56,6 @@ object Retrieval {
     * its canonicalized form, for ReuseExchange) is deterministic. */
   private val TermInlineCap = 1024
 
-  /** NOTE (determinism contract): this COLLECTS the query frame's
-    * distinct terms at plan-construction time, while the scoring tail
-    * re-evaluates the same frame lazily — a non-deterministic
-    * `queries` input (sample()/limit() without an order) could prune
-    * terms the scoring join later expects and silently zero their
-    * contributions. The scan paths therefore need a deterministic
-    * queries frame; the indexed paths evaluate it once
-    * ([[collectedQueryTerms]]). */
-  private def pruneByTerms(df: DataFrame, qterms: DataFrame,
-                           termCol: Column): DataFrame =
-    // probe one past the cap so an over-cap workload is detected
-    // without collecting it in full
-    pruneByTermSet(df, qterms.select("term").distinct()
-      .limit(TermInlineCap + 1).collect().map(_.getString(0)).toSeq,
-      qterms, termCol)
-
   /** Prune a postings-shaped frame to the query terms: a literal In()
     * when the distinct term set is small (≤ [[TermInlineCap]] — it
     * reaches a parquet scan as a PushedFilter and row-group
@@ -85,9 +69,12 @@ object Retrieval {
     val ts = terms.filter(_ != null).distinct.sorted
     if (ts.isEmpty) df.filter(lit(false))
     else if (ts.size <= TermInlineCap) df.filter(termCol.isin(ts: _*))
-    else df.join(broadcast(qterms.select("term").distinct()),
-      Seq("term"), "leftsemi")
+    else semiJoinTerms(df, qterms)
   }
+
+  /** Prune to the terms of `qterms` with a broadcast semi-join. */
+  private def semiJoinTerms(df: DataFrame, qterms: DataFrame): DataFrame =
+    df.join(broadcast(qterms.select("term").distinct()), Seq("term"), "leftsemi")
 
   /** The query frame's distinct (qid, term) rows, evaluated ONCE and
     * replayed as a local frame: the term prune and the scoring join
@@ -135,12 +122,13 @@ object Retrieval {
     * per-call corpus scan remains at all.
     *
     * @param docs        corpus (any size)
-    * @param queries     query frame — SMALL BY CONTRACT (it
-    *                    broadcasts; thousands of queries are fine, a
-    *                    query CORPUS is a different operator) and
-    *                    DETERMINISTIC (its term set is evaluated once
-    *                    eagerly for scan pruning and again lazily for
-    *                    scoring — see [[pruneByTerms]])
+    * @param queries     query frame — SMALL BY CONTRACT (it is
+    *                    evaluated once at call time, collected to the
+    *                    driver and broadcast; thousands of queries are
+    *                    fine, more than
+    *                    [[graft.sources.Sources.QueryBatchCap]] rows
+    *                    fail loudly — a query CORPUS is a different
+    *                    operator)
     * @param corpusStats precomputed (docCount, totalTokens) — skips
     *                    the stats scan; token counts must come from
     *                    the same tokenizer ([[Dedup.tokens]], empties
@@ -156,8 +144,7 @@ object Retrieval {
       s"bm25TopK: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
     val tok = toks(col(text))
     // distinct query terms (duplicate terms in a query count once)
-    val qterms = queries.select(col(qid),
-      explode(array_distinct(toks(col(qtext)))).as("term"))
+    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext, "bm25TopK")
     // ONE corpus tokenization, PRUNED BEFORE THE SHUFFLE: the literal
     // In() on the query-term set evaluates inside the exploded scan's
     // codegen stage, so the tf aggregation only ever shuffles rows
@@ -167,7 +154,8 @@ object Retrieval {
     // doc-grain join back against the corpus is needed. (A standing
     // query workload would materialize the unpruned tf as a bucketed
     // inverted index instead of re-scanning per call.)
-    val tf = pruneByTerms(postings(docs, id, text), qterms, col("term"))
+    val tf = pruneByTermSet(postings(docs, id, text), qrows.map(_.getString(1)),
+        qterms, col("term"))
       .groupBy(col(id), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
     // corpus stats: one columnar agg scan (count + total tokens),
     // skipped entirely when the caller passes the known constants
@@ -256,15 +244,19 @@ object Retrieval {
     * absent from the corpus drop (no smoothing mass to stand on —
     * the standard practical rule). Only docs matching ≥1 term are
     * ranked (the all-smoothing tail is rank noise by construction).
+    * `queries` is small by contract, as for [[bm25TopK]]: evaluated
+    * once at call time and collected, failing loudly past
+    * [[graft.sources.Sources.QueryBatchCap]] rows.
     * Output: (qid, id, ql) — k best per query, ties to ascending id. */
   def queryLikelihoodTopK(docs: DataFrame, id: String, text: String,
                           queries: DataFrame, qid: String, qtext: String,
                           k: Int = 10, mu: Double = 2000.0): DataFrame = {
     require(k >= 1, s"queryLikelihoodTopK: k must be >= 1 (got $k)")
     require(mu > 0, s"queryLikelihoodTopK: mu must be > 0 (got $mu)")
-    val qterms = queries.select(col(qid),
-      explode(array_distinct(toks(col(qtext)))).as("term"))
-    val tf = pruneByTerms(postings(docs, id, text), qterms, col("term"))
+    val (qterms, qrows) =
+      collectedQueryTerms(queries, qid, qtext, "queryLikelihoodTopK")
+    val tf = pruneByTermSet(postings(docs, id, text), qrows.map(_.getString(1)),
+        qterms, col("term"))
       .groupBy(col(id), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
     val stats = docs.agg(count(lit(1)).as("nd"),
       sum(size(toks(col(text)))).as("tl"))
@@ -535,12 +527,15 @@ object Retrieval {
         Seq(col("__w").desc, col("term").asc), fbTerms)
       .select(col(qid), col("term"))
     val expanded = qterms.unionByName(topFb).distinct()
-    val expFrame = Sources.collectCapped(expanded, prfCap) match {
-      case Some(rows) => spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), expanded.schema)
-      case None => expanded
+    // collected once, the expansion's rows feed both the term prune and
+    // the scoring join; past the cap both read the lazy frame
+    val (expFrame, tf) = Sources.collectCapped(expanded, prfCap) match {
+      case Some(rows) =>
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), expanded.schema)
+        (local, pruneByTermSet(index, rows.map(_.getString(1)).toSeq, local, col("term")))
+      case None => (expanded, semiJoinTerms(index, expanded))
     }
-    val tf = pruneByTerms(index, expFrame, col("term"))
     val statsDf = spark.range(1)
       .select(lit(stats._1).as("nd"), lit(stats._2).as("tl"))
     scoreAndCut(tf, statsDf, id, expFrame, qid, k, k1, b)

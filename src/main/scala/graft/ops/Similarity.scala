@@ -136,57 +136,29 @@ object Similarity {
     guard.otherwise(key)
   }
 
-  /** Brute-force top-k cosine against a literal query vector:
-    * distributed linear scan + TakeOrdered (no shuffle). */
-  def bruteForceTopK(corpus: DataFrame, id: String, vec: String,
-                     query: Seq[Double], k: Int): DataFrame = {
-    val q = array(query.map(lit): _*)
-    corpus
-      .select(col(id), cosine(col(vec).cast("array<double>"), q).as("cos"))
-      .orderBy(col("cos").desc, col(id))
-      .limit(k)
-  }
-
   /** Brute-force top-k for a whole query FRAME: broadcast the queries,
     * one pass over the corpus, per-query top-k via partitioned window. */
   def bruteForceTopKJoin(corpus: DataFrame, cid: String, cvec: String,
                          queries: DataFrame, qid: String, qvec: String,
+                         k: Int): DataFrame =
+    cosineTopK(corpus.crossJoin(broadcast(queries.select(
+      col(qid).as("query_id"), col(qvec).as("__qv")))), cid, cvec, k)
+
+  /** The per-query cut every batched cosine retrieval shares: over
+    * candidate rows carrying the corpus columns, `query_id` and the
+    * query vector `__qv`, keep each query's k best by (cos desc, cid)
+    * under a `query_id`-partitioned window — never a global sort.
+    * Output: (query_id, neighbor_id, cos, rank 1..k). */
+  private def cosineTopK(candidates: DataFrame, cid: String, cvec: String,
                          k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val joined = corpus.crossJoin(broadcast(queries.select(
-      col(qid).as("query_id"), col(qvec).as("__qv"))))
-      .withColumn("cos", cosine(col(cvec).cast("array<double>"), col("__qv").cast("array<double>")))
-    joined
+    candidates
+      .withColumn("cos", cosine(col(cvec).cast("array<double>"), col("__qv")))
       .withColumn("__rk", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col(cid))))
       .filter(col("__rk") <= k)
-      .select(col("query_id"), col(cid).as("neighbor_id"), col("cos"), col("__rk").as("rank"))
-  }
-
-  /** LSH-bucketed top-k: prune to the query's bucket (plus multi-probe
-    * neighbors within hamming distance 1), then exact cosine. */
-  def lshTopK(corpus: DataFrame, id: String, vec: String,
-              query: Seq[Double], k: Int, nPlanes: Int = 8): DataFrame = {
-    val spark = corpus.sparkSession
-    val qDf = spark.range(1).select(array(query.map(lit): _*).as("qv"))
-    lshTopKFrame(corpus, id, vec, qDf, k, nPlanes)
-  }
-
-  /** LSH top-k against a one-row query FRAME (column `qv`:
-    * array<double>) — no driver-side action anywhere in plan
-    * construction; the query row is broadcast. */
-  def lshTopKFrame(corpus: DataFrame, id: String, vec: String,
-                   queryDf: DataFrame, k: Int, nPlanes: Int = 8): DataFrame = {
-    val keyed = corpus.withColumn("__bucket", hyperplaneKey(col(vec).cast("array<double>"), nPlanes))
-    val qKeyed = queryDf.select(col("qv"), hyperplaneKey(col("qv"), nPlanes).as("qb"))
-    // multi-probe: query bucket + all buckets at hamming distance 1
-    val probes = qKeyed.select(col("qv"), explode(concat(array(col("qb")),
-      transform(sequence(lit(0), lit(nPlanes - 1)),
-        p => col("qb").bitwiseXOR(call_function("shiftleft", lit(1L), p))))).as("__bucket"))
-    keyed.join(broadcast(probes), Seq("__bucket"))
-      .select(col(id), cosine(col(vec).cast("array<double>"), col("qv")).as("cos"))
-      .orderBy(col("cos").desc, col(id))
-      .limit(k)
+      .select(col("query_id"), col(cid).as("neighbor_id"), col("cos"),
+        col("__rk").as("rank"))
   }
 
   /** Multi-query LSH top-k: every query row probes its own bucket plus
@@ -202,7 +174,6 @@ object Similarity {
                   queries: DataFrame, qid: String, qvec: String,
                   k: Int, nPlanes: Int = 8,
                   broadcastProbes: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val keyed = corpus.withColumn("__bucket",
       hyperplaneKey(col(cvec).cast("array<double>"), nPlanes))
     val qKeyed = queries.select(col(qid).as("query_id"),
@@ -215,14 +186,9 @@ object Similarity {
     // non-broadcast path: no hint — Catalyst picks sort-merge (or AQE
     // re-plans) on the co-partitioned __bucket key; forcing a hash
     // join would trade SMJ's spill-safety away under bucket skew
-    keyed.join(
-      if (broadcastProbes) broadcast(probes) else probes, Seq("__bucket"))
-      .withColumn("cos", cosine(col(cvec).cast("array<double>"), col("__qv")))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col(cid))))
-      .filter(col("__rk") <= k)
-      .select(col("query_id"), col(cid).as("neighbor_id"), col("cos"),
-        col("__rk").as("rank"))
+    cosineTopK(keyed.join(
+      if (broadcastProbes) broadcast(probes) else probes, Seq("__bucket")),
+      cid, cvec, k)
   }
 
   /** Recall@k of the LSH retrieval against brute-force ground truth —
@@ -519,13 +485,7 @@ object Similarity {
         (row_number().over(Window.orderBy(md5(col(id).cast("string")), col(id))) - 1))
       .select("list_id", "centroid")
       .localCheckpoint(true)
-    val assigned = corpus.crossJoin(broadcast(centroids))
-      .withColumn("__d", l2(col(vec).cast("array<double>"), col("centroid")))
-      .groupBy(col(id))
-      .agg(
-        min_by(col("list_id"), struct(col("__d"), col("list_id"))).as("list_id"),
-        first(col(vec)).as(vec))
-    (assigned, centroids)
+    (assignToCentroids(corpus, id, vec, centroids), centroids)
   }
 
   /** Assign vectors to an EXISTING centroid table — incremental index
@@ -543,28 +503,6 @@ object Similarity {
       .groupBy(col(id))
       .agg(min_by(col("list_id"), struct(col("__d"), col("list_id"))).as("list_id"),
         first(col(vec)).as(vec))
-
-  /** IVF query: probe the nprobe nearest centroids' lists. */
-  def ivfTopK(assigned: DataFrame, centroids: DataFrame, id: String, vec: String,
-              query: Seq[Double], k: Int, nprobe: Int): DataFrame = {
-    val qDf = assigned.sparkSession.range(1).select(array(query.map(lit): _*).as("qv"))
-    ivfTopKFrame(assigned, centroids, id, vec, qDf, k, nprobe)
-  }
-
-  /** IVF top-k against a one-row query FRAME (column `qv`) — the
-    * centroid ranking happens in-plan over the tiny centroid table. */
-  def ivfTopKFrame(assigned: DataFrame, centroids: DataFrame, id: String, vec: String,
-                   queryDf: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val lists = centroids.crossJoin(broadcast(queryDf))
-      .withColumn("d", l2(col("centroid"), col("qv")))
-      .withColumn("__r", row_number().over(Window.orderBy(col("d").asc, col("list_id"))))
-      .filter(col("__r") <= nprobe).select("list_id", "qv")
-    assigned.join(broadcast(lists), Seq("list_id"))
-      .select(col(id), cosine(col(vec).cast("array<double>"), col("qv")).as("cos"))
-      .orderBy(col("cos").desc, col(id))
-      .limit(k)
-  }
 
   /** Multi-query IVF top-k: each query ranks the (tiny, broadcast)
     * centroid table to pick its nprobe lists, then candidates from the
@@ -585,13 +523,7 @@ object Similarity {
         Window.partitionBy(col("query_id")).orderBy(col("__d").asc, col("list_id"))))
       .filter(col("__r") <= nprobe)
       .select(col("list_id"), col("query_id"), col("__qv"))
-    assigned.join(broadcast(lists), Seq("list_id"))
-      .withColumn("cos", cosine(col(cvec).cast("array<double>"), col("__qv")))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col(cid))))
-      .filter(col("__rk") <= k)
-      .select(col("query_id"), col(cid).as("neighbor_id"), col("cos"),
-        col("__rk").as("rank"))
+    cosineTopK(assigned.join(broadcast(lists), Seq("list_id")), cid, cvec, k)
   }
 
   /** One Lloyd iteration of k-means over an embedding column:
@@ -1214,21 +1146,10 @@ object Similarity {
     // training (m seed TakeOrdereds + m centroid aggs over the corpus)
     val books = pqTrain(corpus, id, vec, dims, m, ksub, iters)
       .localCheckpoint(true)
-    val cb = books.select("subspace", "cid", "centroid").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    var enc = corpus.select(col(id), col(vec).cast("array<double>").as("__v"))
-    if (ksub.toLong * dsub <= 65536) {
-      // literal-inlined argmin — pure codegen projection, zero shuffle
-      for (s <- 0 until m) {
-        val cands = cb.filter(_._1 == s).sortBy(_._2).map { case (_, cid, cv) =>
-          struct(
-            l2(slice(col("__v"), s * dsub + 1, dsub),
-              array(cv.map(lit).toSeq: _*)).as("d"),
-            lit(cid).as("cid")) }
-        val best = if (cands.length == 1) cands.head else least(cands.toSeq: _*)
-        enc = enc.withColumn(s"__code_$s", best.getField("cid"))
-      }
-    } else {
+    val cb = codebooksOf(books)
+    val vecs = corpus.select(col(id), col(vec).cast("array<double>").as("__v"))
+    val enc = if (ksub.toLong * dsub <= 65536) pqEncode(vecs, "__v", cb, m, dsub)
+    else {
       // past the codegen envelope: ONE broadcast nested-loop against the
       // full codebook + ONE agg resolving all m argmins (min_by over a
       // (dist, cid) struct per subspace — identical tie-break)
@@ -1236,7 +1157,7 @@ object Similarity {
         .toDF("__s", "__cid", "__cv"))
       val far = struct(lit(Double.PositiveInfinity).as("d"),
         lit(Long.MaxValue).as("cid"))
-      enc = enc.crossJoin(cdf)
+      vecs.crossJoin(cdf)
         .withColumn("__d",
           l2(slice(col("__v"), col("__s") * lit(dsub) + 1, lit(dsub)), col("__cv")))
         .groupBy(col(id))
@@ -1288,6 +1209,8 @@ object Similarity {
     * (index-order IEEE residuals, the proven l2 kernel parity, m adds
     * in subspace order, ties by id) — the oracle replays coarse
     * assignment, residuals, codebooks, encode, LUT, and cut.
+    * Single-query by construction, it stays as the in-plan reference
+    * of [[ivfPqTopKJoin]], which serves query batches.
     * Output: (id, adc, rank 1..k). */
   def ivfPqTopK(corpus: DataFrame, id: String, vec: String, dims: Int,
                 nLists: Int, nProbe: Int, m: Int, ksub: Int, iters: Int,
@@ -1299,35 +1222,8 @@ object Similarity {
         "envelope — use pqTopKAdc's broadcast fallback shape")
     require(nProbe >= 1 && nProbe <= nLists,
       s"ivfPqTopK: nProbe=$nProbe must be in 1..$nLists")
-    // coarse quantizer + one-partial-agg assignment
-    val (assigned, centroids) = ivfIndexDeterministic(corpus, id, vec, nLists)
-    // residual frame: v − centroid[list], codegen projection.
-    // MATERIALIZED once: the lazy frame is otherwise re-executed by
-    // every pqTrain seed/step scan, the codebook collect, each probe
-    // LUT, and the final ADC scan — 13 full recomputes of the
-    // assignment aggregation measured at r17 (guide §5: cache an
-    // intermediate that is reused and expensive to recompute).
-    val resid = assigned.join(broadcast(centroids), Seq("list_id"))
-      .select(col(id), col("list_id"),
-        vecDiff(col(vec), col("centroid")).as("__rv"))
-      .localCheckpoint(true)
-    // global PQ codebooks over residual space (standard IVFADC) —
-    // m·ksub rows, materialized so the cb collect and the per-probe
-    // LUT jobs below don't each re-run the Lloyd training subtree
-    val books = pqTrain(resid, id, "__rv", dims, m, ksub, iters)
-      .localCheckpoint(true)
-    val cb = books.select("subspace", "cid", "centroid").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    var enc = resid
-    for (s <- 0 until m) {
-      val cands = cb.filter(_._1 == s).sortBy(_._2).map { case (_, cid, cv) =>
-        struct(
-          l2(slice(col("__rv"), s * dsub + 1, dsub),
-            array(cv.map(lit).toSeq: _*)).as("d"),
-          lit(cid).as("cid")) }
-      val best = if (cands.length == 1) cands.head else least(cands.toSeq: _*)
-      enc = enc.withColumn(s"__code_$s", best.getField("cid"))
-    }
+    val (enc, centroids, books, _) =
+      ivfPqEncodeFrames(corpus, id, vec, dims, nLists, m, ksub, iters)
     // probe: nProbe nearest coarse cells to q (driver-tiny)
     val probed = centroids.crossJoin(broadcast(queryDf))
       .withColumn("__d", l2(col("centroid"), col("qv")))
@@ -1417,18 +1313,25 @@ object Similarity {
                                 iters: Int):
       (DataFrame, DataFrame, DataFrame, Array[(Int, Long, Array[Double])]) = {
     val dsub = dims / m
+    // coarse quantizer + one-partial-agg assignment
     val (assigned, centroids) = ivfIndexDeterministic(corpus, id, vec, nLists)
-    // materialized like ivfPqTopK's: the Lloyd seed/step scans, the
-    // codebook collect, and the encode scan otherwise each re-run the
-    // assignment aggregation from the parquet scan up
+    // residual frame: v − centroid[list], codegen projection.
+    // MATERIALIZED once: the lazy frame is otherwise re-executed by
+    // every pqTrain seed/step scan, the codebook collect, each probe
+    // LUT, and the final ADC scan — 13 full recomputes of the
+    // assignment aggregation measured at r17 (guide §5: cache an
+    // intermediate that is reused and expensive to recompute).
     val resid = assigned.join(broadcast(centroids), Seq("list_id"))
       .select(col(id), col("list_id"),
         vecDiff(col(vec), col("centroid")).as("__rv"))
       .localCheckpoint(true)
+    // global PQ codebooks over residual space (standard IVFADC) —
+    // m·ksub rows, materialized so the cb collect and the per-probe
+    // LUT jobs don't each re-run the Lloyd training subtree
     val books = pqTrain(resid, id, "__rv", dims, m, ksub, iters)
       .localCheckpoint(true)
     val cb = codebooksOf(books)
-    (pqEncodeResiduals(resid, cb, m, dsub), centroids, books, cb)
+    (pqEncode(resid, "__rv", cb, m, dsub), centroids, books, cb)
   }
 
   private def codebooksOf(books: DataFrame): Array[(Int, Long, Array[Double])] =
@@ -1439,24 +1342,25 @@ object Similarity {
     centroids.select("list_id", "centroid").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
 
-  /** Literal-argmin PQ encode of a residual frame against a
+  /** Literal-argmin PQ encode of the array<double> column `vecCol`
+    * (a residual, or a raw vector for flat PQ) against a
     * driver-resident codebook — the kmeansLloyd assignment trick: a
-    * pure codegen projection, zero shuffle. Drops the residual column
-    * (the codes ARE the compression). */
-  private def pqEncodeResiduals(resid: DataFrame,
-                                cb: Array[(Int, Long, Array[Double])],
-                                m: Int, dsub: Int): DataFrame = {
-    var enc = resid
+    * pure codegen projection, zero shuffle. Adds `__code_0..m-1` and
+    * drops `vecCol` (the codes ARE the compression). */
+  private def pqEncode(df: DataFrame, vecCol: String,
+                       cb: Array[(Int, Long, Array[Double])],
+                       m: Int, dsub: Int): DataFrame = {
+    var enc = df
     for (s <- 0 until m) {
       val cands = cb.filter(_._1 == s).sortBy(_._2).map { case (_, cid, cv) =>
         struct(
-          l2(slice(col("__rv"), s * dsub + 1, dsub),
+          l2(slice(col(vecCol), s * dsub + 1, dsub),
             array(cv.map(lit).toSeq: _*)).as("d"),
           lit(cid).as("cid")) }
       val best = if (cands.length == 1) cands.head else least(cands.toSeq: _*)
       enc = enc.withColumn(s"__code_$s", best.getField("cid"))
     }
-    enc.drop("__rv")
+    enc.drop(vecCol)
   }
 
   /** The query-independent half of IVF-PQ serving, resident on the
@@ -1690,10 +1594,6 @@ object Similarity {
   private val indexes =
     new graft.sources.FileSets.Lru[Vector[(String, Long, Long)], IvfPqIndex](IndexCacheEntries)
 
-  /** Drop every cached IVF-PQ index (benchmarks call this between
-    * timed runs, next to `ScanFns.unpersistScans()`). */
-  def clearIndexCache(): Unit = indexes.clear()
-
   /** The meta, centroid and codebook sidecars of the index at `path`,
     * loaded ONCE per sidecar file set: keyed by every sidecar file's
     * path, size and mtime, so a rebuild at the same path (new file
@@ -1737,7 +1637,7 @@ object Similarity {
     // one delta file per touched list (the build's layout cap) — the
     // day-2 small-file tail then grows one file per (append × list),
     // absorbed by a periodic compaction like any streaming sink
-    pqEncodeResiduals(resid, ix.model.cb, ix.model.m, ix.model.dims / ix.model.m)
+    pqEncode(resid, "__rv", ix.model.cb, ix.model.m, ix.model.dims / ix.model.m)
       .repartition(col("list_id"))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
   }

@@ -45,14 +45,27 @@ private[graft] object FileSets {
       name.endsWith("._COPYING_")) &&
       !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
 
+  /** Every live [[Lru]], held weakly so a dropped cache is collected. */
+  private val caches = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[Lru[_, _], java.lang.Boolean])
+
+  /** Empty every driver-side cache of file-derived state (parquet
+    * schemas, IVF-PQ index sidecars, FileBloom sidecars): the next
+    * read loads or infers again, as the first one did. Benchmarks call
+    * this between timed runs. */
+  def clearCaches(): Unit =
+    caches.synchronized(caches.toArray(Array.empty[Lru[_, _]])).foreach(_.clear())
+
   /** A bounded least-recently-used map, safe to share across threads:
     * at most `bound` entries and at most `maxWeight` of summed
     * `weight` (the least recently used go first; an entry heavier than
-    * `maxWeight` on its own is not kept, and evicts nothing). */
+    * `maxWeight` on its own is not kept, and evicts nothing). Every
+    * instance is emptied by [[clearCaches]]. */
   final class Lru[K, V](bound: Int, maxWeight: Long = Long.MaxValue,
                         weight: V => Long = (_: V) => 0L) {
     private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
     private var total = 0L
+    caches.synchronized(caches.add(this))
     def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
     def put(k: K, v: V): Unit = m.synchronized {
       Option(m.remove(k)).foreach(old => total -= weight(old))

@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.StructType
   *   `spark.read.schema(...)` and runs no inference. Inference runs
   *   again when the file set changes (an overwrite, an append, a
   *   compaction: Spark names every new file uniquely), when one of
-  *   those confs changes, after [[clearSchemaCache]], or once the entry
+  *   those confs changes, after [[FileSets.clearCaches]], or once the entry
   *   has been evicted. A root that does not exist is never cached: the
   *   read goes straight to Spark and fails as it always did. When the
   *   roots are plain data files (a manifested table's file list), a
@@ -70,10 +70,6 @@ object Sources {
                                      files: Vector[(String, Long, Long)])
 
   private val schemas = new FileSets.Lru[SchemaKey, StructType](SchemaCacheEntries)
-
-  /** Drop every cached parquet schema (benchmarks call this between
-    * timed runs, next to `ScanFns.unpersistScans()`). */
-  def clearSchemaCache(): Unit = schemas.clear()
 
   /** Read parquet, inferring the schema once per file set (see the
     * object scaladoc for the cache key and when inference runs again). */

@@ -192,8 +192,10 @@ class OpsSpec extends SparkTestBase {
   test("LSH top-k finds an exact-match query vector (self-recall = 1)") {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .withColumn("embedding", col("embedding").cast("array<double>"))
-    val q = vecs.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val top = Similarity.lshTopKFrame(vecs, "vec_id", "embedding", q, k = 1, nPlanes = 8)
+    val q = vecs.filter(col("vec_id") === 0)
+    val top = Similarity.lshTopKJoin(vecs, "vec_id", "embedding",
+        q, "vec_id", "embedding", k = 1, nPlanes = 8)
+      .select(col("neighbor_id").as("vec_id"), col("cos"))
       .collect()(0)
     // the query IS corpus vector 0 → identical hyperplane bucket → found
     assert(top.getAs[Long]("vec_id") == 0L)
@@ -316,9 +318,10 @@ class OpsSpec extends SparkTestBase {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (assigned, centroids) = Similarity.ivfIndex(vecs, "vec_id", "embedding", nLists = 4)
     val q = vecs.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>").as("qv"))
-    val top = Similarity.ivfTopKFrame(assigned, centroids, "vec_id", "embedding",
-      q, k = 1, nprobe = 1).collect()(0)
+    val top = Similarity.ivfTopKJoin(assigned, centroids, "vec_id", "embedding",
+        q, "vec_id", "embedding", k = 1, nprobe = 1)
+      .select(col("neighbor_id").as("vec_id"), col("cos"))
+      .collect()(0)
     assert(top.getAs[Long]("vec_id") == 0L)
   }
 

@@ -146,6 +146,15 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("single-query ANN registry queries plan no unpartitioned Window") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    Seq("x_ann_lsh", "x_ann_lsh_768", "x_ann_ivf").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
+      val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+      assert(global.isEmpty, s"$name plans an unpartitioned Window:\n$plan")
+    }
+  }
+
   test("fence-broadcast ops (winsorize/qbin/mad) never window and broadcast the fences") {
     import graft.ops.Profiling
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -612,7 +621,7 @@ class PlanSpec extends SparkTestBase {
       "f_fct_asfactor" -> "level table", "f_fct_inseq" -> "level table",
       // deterministic IVF: row_number ranks the nLists-row CENTROID
       // table (broadcast-sized by the nLists<=65536 guard)
-      "x_ann_ivf" -> "centroid table", "x_ann_recall_ivf" -> "centroid table",
+      "x_ann_recall_ivf" -> "centroid table",
       "x_assign" -> "centroid table", "x_semdedup" -> "centroid table",
       // multi-query IVFADC: row_number ranks the nLists-row centroid
       // table (the md5 coarse-centroid pick); the probe and top-k

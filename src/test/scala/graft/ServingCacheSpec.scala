@@ -249,6 +249,16 @@ class ServingCacheSpec extends SparkTestBase {
         big.select(col("id").as("q_id"), lit("alpha").as("qtext")), "q_id", "qtext")
     }
     assert(bm25.getMessage.contains("bm25TopKIndexed: the query batch"), bm25.getMessage)
+    // the scan paths collect the same query batch
+    val bigQueries = big.select(col("id").as("q_id"), lit("alpha").as("qtext"))
+    val scan = intercept[IllegalArgumentException] {
+      Retrieval.bm25TopK(docs, "doc_id", "text", bigQueries, "q_id", "qtext")
+    }
+    assert(scan.getMessage.contains("bm25TopK: the query batch"), scan.getMessage)
+    val ql = intercept[IllegalArgumentException] {
+      Retrieval.queryLikelihoodTopK(docs, "doc_id", "text", bigQueries, "q_id", "qtext")
+    }
+    assert(ql.getMessage.contains("queryLikelihoodTopK: the query batch"), ql.getMessage)
     val e = embeddings(41)
     Similarity.ivfPqIndexWrite(e, "vec_id", "embedding", dims = 16,
       nLists = 6, m = 4, ksub = 4, iters = 1, path = s"$dir/ivf")
@@ -275,7 +285,7 @@ class ServingCacheSpec extends SparkTestBase {
     }
   }
 
-  test("bm25TopKIndexed evaluates a non-deterministic queries frame once") {
+  test("BM25 and QL paths evaluate a non-deterministic queries frame once") {
     import spark.implicits._
     val docs = (1 to 60).map(i => (i.toLong, if (i % 2 == 0) "alpha x" else "beta y"))
       .toDF("doc_id", "text")
@@ -284,18 +294,48 @@ class ServingCacheSpec extends SparkTestBase {
       .write.parquet(s"$dir/postings.parquet")
     val stats = Retrieval.corpusStatsOf(docs, "text")
     val idx = spark.read.parquet(s"$dir/postings.parquet")
-    def ranked(qs: DataFrame) = Retrieval.bm25TopKIndexed(idx, stats, "doc_id",
-        qs, "q_id", "qtext", k = 3)
-      .orderBy("doc_id").collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    val paths: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "bm25TopKIndexed" -> (qs => Retrieval.bm25TopKIndexed(idx, stats, "doc_id",
+        qs, "q_id", "qtext", k = 3)),
+      "bm25TopK" -> (qs => Retrieval.bm25TopK(docs, "doc_id", "text",
+        qs, "q_id", "qtext", k = 3)),
+      "queryLikelihoodTopK" -> (qs => Retrieval.queryLikelihoodTopK(docs, "doc_id", "text",
+        qs, "q_id", "qtext", k = 3)))
     // each evaluation of the frame flips its query text, so a prune
     // and a scoring join that evaluated it separately would disagree
     val flip = udf(() =>
       if (ServingCacheSpec.flips.getAndIncrement() % 2 == 0) "alpha" else "beta")
       .asNondeterministic()
-    val got = ranked(Seq("q").toDF("q_id").withColumn("qtext", flip()))
-    val alpha = ranked(Seq(("q", "alpha")).toDF("q_id", "qtext"))
-    val beta = ranked(Seq(("q", "beta")).toDF("q_id", "qtext"))
-    assert(got.nonEmpty && (got == alpha || got == beta), s"$got")
+    paths.foreach { case (name, search) =>
+      def ranked(qs: DataFrame) = search(qs)
+        .orderBy("doc_id").collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+      val got = ranked(Seq("q").toDF("q_id").withColumn("qtext", flip()))
+      val alpha = ranked(Seq(("q", "alpha")).toDF("q_id", "qtext"))
+      val beta = ranked(Seq(("q", "beta")).toDF("q_id", "qtext"))
+      assert(got.nonEmpty && (got == alpha || got == beta), s"$name: $got")
+    }
+  }
+
+  test("FileSets.clearCaches: a repeat readParquet infers again and lookupMany reloads its sidecar") {
+    import spark.implicits._
+    val data = s"${tmp("graft_clear_caches")}/d"
+    (0L until 1000L).map(i => (i, i * 2L)).toDF("k", "v")
+      .repartition(6, col("k")).write.parquet(data)
+    val side = spark.read.parquet(FileBloomIndex.writeSidecar(spark, data, col("k"), 300L))
+    def lookup() = FileBloomIndex.lookupMany(spark, data, side, col("k"), Seq(7L, 500L))
+    Sources.readParquet(spark, data)
+    lookup()
+    assert(jobsDuring(Sources.readParquet(spark, data)) == 0)
+    assert(jobsDuring(lookup()) == 0)
+    graft.sources.FileSets.clearCaches()
+    val infer = jobsDuring(Sources.readParquet(spark, data))
+    assert(infer >= 1, "a cleared schema cache must infer again")
+    // the schema is cached again, so any job here is the sidecar load
+    val reload = jobsDuring(lookup())
+    assert(reload >= 1, "a cleared sidecar cache must load the sidecar again")
+    assert(jobsDuring(lookup()) == 0)
+    assert(lookup().collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq ==
+      Seq((7L, 14L), (500L, 1000L)))
   }
 }
 
