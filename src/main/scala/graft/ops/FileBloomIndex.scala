@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.plans.{BloomBuildAgg, BloomBytesContainExpr, BloomKernels}
-import graft.sources.{FileSets, Sources}
+import graft.sources.{Resident, Sources}
 
 /** Per-FILE Bloom sidecar for point lookups on a high-cardinality key
   * — the file-level complement of parquet's native row-group bloom
@@ -19,13 +19,13 @@ import graft.sources.{FileSets, Sources}
   * files that might contain the key: O(1 + fpp·files) file opens
   * instead of all of them.
   *
-  * The sidecar is ~(files × bits/8) bytes. Up to
-  * [[SidecarDriverBytes]] it lives on the DRIVER: a lookup probes
-  * every file's bloom there with [[BloomKernels.mightContainBytes]],
-  * the kernel the executor filter runs, so pruning is identical and
-  * costs no Spark job. A sidecar read as a parquet file scan
-  * (`spark.read.parquet(sidecarPath)`) is loaded once per sidecar
-  * file set and kept in a cache bounded by the same byte budget. Any
+  * The sidecar is ~(files × bits/8) bytes. A sidecar read as a
+  * parquet file scan (`spark.read.parquet(sidecarPath)`) within the
+  * driver's byte budget ([[graft.sources.Resident.DriverBytes]]) is
+  * loaded ONCE per sidecar file set and lives on the DRIVER: a lookup
+  * probes every file's bloom there with
+  * [[BloomKernels.mightContainBytes]], the kernel the executor filter
+  * runs, so pruning is identical and costs no Spark job. Any
   * other sidecar frame (e.g. [[build]]'s output), and at 100 TB — e.g.
   * 100k files × 1.2 MB bitsets for 1M keys/file at 1% fpp — any
   * sidecar, is probed in EXECUTORS ([[candidateFilesDF]]), where the
@@ -129,7 +129,7 @@ object FileBloomIndex {
     * EXECUTORS (BloomBytesContainExpr inside the filter), so the
     * bitsets are tested where they live and never move. This is the
     * probe of a sidecar that is not a parquet file scan or is past
-    * [[SidecarDriverBytes]]: at the object
+    * the driver's byte budget: at the object
     * scaladoc's 100 TB sizing (100k files × 1.2 MB bitsets) the driver
     * payload of a collect here is a path list, not ~120 GB of
     * bitsets. */
@@ -152,7 +152,7 @@ object FileBloomIndex {
     candidateFilesDF(sidecar, Seq(keyHash)).collect().map(_.getString(0)).toSeq
 
   /** Point lookup: prune files by the sidecar probe (on the driver
-    * within [[SidecarDriverBytes]], see [[lookupMany]]), then scan
+    * when the sidecar is resident, see [[lookupMany]]), then scan
     * only the survivors with the equality filter pushed down (footer +
     * row-group pruning still apply inside them). Returns an empty
     * frame (correct schema) when every file is bloom-negative. */
@@ -163,76 +163,30 @@ object FileBloomIndex {
   /** Batch point lookup: ONE projection hashes every probe (cast to
     * the key column's type — see [[hashAll]]), ONE sidecar probe
     * prunes files for the whole batch, ONE scan of the surviving files
-    * with the IN filter pushed down. The probe runs on the driver
-    * against a parquet-scan sidecar's (file, bloom, num_hashes) rows
-    * when they fit [[SidecarDriverBytes]] ([[sidecarRows]]); a warm
-    * lookup then starts no job before the data scan. Otherwise the
-    * executor probe [[candidateFilesDF]] runs. */
+    * with the IN filter pushed down. The data's schema and key type come
+    * from [[Sources]]' schema cache, so no relation over the whole data
+    * directory is built. The probe runs on the driver against a
+    * parquet-scan sidecar's (file, bloom, num_hashes) rows when they are
+    * resident ([[graft.sources.Resident]]); a warm lookup then starts no
+    * job before the data scan. Otherwise the executor probe
+    * [[candidateFilesDF]] runs. */
   def lookupMany(spark: SparkSession, dataPath: String, sidecar: DataFrame,
                  key: Column, values: Seq[Any]): DataFrame = {
-    val all = Sources.readParquet(spark, dataPath)
-    val keyType = all.select(key).schema.head.dataType
+    val schema = Sources.parquetSchema(spark, dataPath)
+    val empty = spark.createDataFrame(java.util.List.of[Row](), schema)
+    val keyType = empty.select(key).schema.head.dataType
     val hashes = hashAll(spark, values, keyType)
-    val files = sidecarRows(spark, sidecar) match {
-      case Some(rows) =>
+    val files = Resident.of(sidecar, Seq("file", "bloom", "num_hashes")) match {
+      case Some(side) =>
         // a NULL bloom or NULL num_hashes prunes the file, as the
         // executor filter's NULL does
-        rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2) && hashes.exists(h =>
+        side.rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2) && hashes.exists(h =>
           BloomKernels.mightContainBytes(r.getAs[Array[Byte]](1), h, r.getInt(2))))
           .map(_.getString(0)).toSeq
       case None =>
         candidateFilesDF(sidecar, hashes).collect().map(_.getString(0)).toSeq
     }
-    if (files.isEmpty) all.filter(lit(false))
-    else spark.read.schema(all.schema).parquet(files: _*)
-      .filter(key.isin(values: _*))
-  }
-
-  /** Most sidecar bytes (bloom bitsets) a lookup probes on the driver,
-    * and most the driver keeps across every cached sidecar. */
-  final val SidecarDriverBytes: Long = 32L << 20
-
-  /** Most parquet-scan sidecars the driver keeps (least recently used
-    * goes first), within [[SidecarDriverBytes]] of bitsets in all. */
-  val SidecarCacheEntries = 8
-
-  private def bloomBytes(r: Row): Long =
-    if (r.isNullAt(1)) 0L else r.getAs[Array[Byte]](1).length.toLong
-
-  private val sidecars = new FileSets.Lru[Vector[(String, Long, Long)],
-    Option[Array[Row]]](SidecarCacheEntries, SidecarDriverBytes,
-    _.fold(0L)(_.iterator.map(bloomBytes).sum))
-
-  /** The sidecar's (file, bloom, num_hashes) rows on the driver, or
-    * None when the probe belongs in executors. Only a sidecar frame that
-    * is a bare parquet file scan is loaded, ONCE per file set: keyed by
-    * the [[FileSets.fingerprint]] of its input files, so a sidecar
-    * rewritten at the same path (new file names) loads again. A file
-    * set whose parquet bytes pass [[SidecarDriverBytes]] is never
-    * loaded; the load reads every file in ONE task, so the byte cap
-    * bounds the whole collect (bitsets compress, so file bytes alone
-    * do not). Any other frame is None: its size is unknown until it
-    * runs, and probing it in executors costs the same one job. */
-  private def sidecarRows(spark: SparkSession, sidecar: DataFrame): Option[Array[Row]] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val fileScan = sidecar.queryExecution.analyzed match {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.fileFormat.isInstanceOf[ParquetFileFormat]
-        case _ => false
-      }
-      case _ => false
-    }
-    val fp = if (!fileScan) None
-      else FileSets.fingerprint(spark.sessionState.newHadoopConf(),
-        sidecar.inputFiles.toSeq.sorted)
-    fp.flatMap(files => sidecars.get(files).getOrElse {
-      val rows =
-        if (files.map(_._2).sum > SidecarDriverBytes) None
-        else Sources.collectCapped(sidecar.select("file", "bloom", "num_hashes")
-          .coalesce(1), SidecarDriverBytes, bloomBytes)
-      sidecars.put(files, rows)
-      rows
-    })
+    if (files.isEmpty) empty
+    else spark.read.schema(schema).parquet(files: _*).filter(key.isin(values: _*))
   }
 }

@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
-  LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.RowProjection
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, DoubleType,
+  IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
-import graft.sources.Sources
+import graft.sources.{FileSets, Resident, Sources}
 
 /** Lexical retrieval over a document corpus — the sparse complement to
   * the dense ANN stack in [[Similarity]] (hybrid retrieval runs both
@@ -65,7 +66,7 @@ object Retrieval {
     * thousands-of-queries contract: the semi-join keeps the plan
     * O(1)-sized). */
   private def pruneByTermSet(df: DataFrame, terms: Seq[String],
-                             qterms: DataFrame, termCol: Column): DataFrame = {
+                             qterms: => DataFrame, termCol: Column): DataFrame = {
     val ts = terms.filter(_ != null).distinct.sorted
     if (ts.isEmpty) df.filter(lit(false))
     else if (ts.size <= TermInlineCap) df.filter(termCol.isin(ts: _*))
@@ -76,27 +77,36 @@ object Retrieval {
   private def semiJoinTerms(df: DataFrame, qterms: DataFrame): DataFrame =
     df.join(broadcast(qterms.select("term").distinct()), Seq("term"), "leftsemi")
 
-  /** The query frame's distinct (qid, term) rows, evaluated ONCE and
-    * replayed as a local frame: the term prune and the scoring join
-    * then read the same rows, even when `queries` is
-    * non-deterministic (sample()/limit() without an order), and the
-    * prune's term set comes from those rows with no second job.
-    * Queries are driver-sized by contract: more than
+  /** A query batch's distinct (qid, term) rows with their schema; the
+    * local frame over them is built only for a plan that joins it. */
+  private final case class QueryTerms(spark: SparkSession, schema: StructType,
+                                      rows: Seq[Row]) {
+    lazy val frame: DataFrame = spark.createDataFrame(rows.asJava, schema)
+    def terms: Seq[String] = rows.map(_.getString(1))
+  }
+
+  /** The query frame's distinct (qid, term) rows, evaluated ONCE: the
+    * term prune and the scoring then read the same rows, even when
+    * `queries` is non-deterministic (sample()/limit() without an
+    * order), and the prune's term set comes from those rows with no
+    * second job. Queries are driver-sized by contract: more than
     * [[graft.sources.Sources.QueryBatchCap]] query rows fail loudly.
     * The collect takes one row per query (its distinct terms) and
     * explodes on the driver, so over a local query batch the
     * projection folds into the local relation and no Spark job runs.
-    * `op` names the operator in that failure. Returns (rows frame,
-    * rows). */
+    * `op` names the operator in that failure. */
   private def collectedQueryTerms(queries: DataFrame, qid: String,
-                                  qtext: String, op: String): (DataFrame, Seq[Row]) = {
-    val terms = array_distinct(toks(col(qtext)))
-    val schema = queries.select(col(qid), explode(terms).as("term")).schema
-    val rows = Sources.collectAtMost(queries.select(col(qid), terms),
-        Sources.QueryBatchCap, s"$op: the query batch").toSeq.flatMap { r =>
+                                  qtext: String, op: String): QueryTerms = {
+    val perQuery = queries.select(col(qid), array_distinct(toks(col(qtext))))
+    // the schema explode(terms) AS term would give
+    val arr = perQuery.schema(1).dataType.asInstanceOf[ArrayType]
+    val schema = StructType(Seq(perQuery.schema(0),
+      StructField("term", arr.elementType, arr.containsNull)))
+    val rows = Sources.collectAtMost(perQuery, Sources.QueryBatchCap,
+        s"$op: the query batch").toSeq.flatMap { r =>
       Option(r.getSeq[String](1)).getOrElse(Nil).map(t => Row(r.get(0), t))
     }
-    (queries.sparkSession.createDataFrame(rows.asJava, schema), rows)
+    QueryTerms(queries.sparkSession, schema, rows)
   }
 
   /** Tokenize the corpus ONCE PER ROW: project the token array as a
@@ -144,7 +154,7 @@ object Retrieval {
       s"bm25TopK: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
     val tok = toks(col(text))
     // distinct query terms (duplicate terms in a query count once)
-    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext, "bm25TopK")
+    val qt = collectedQueryTerms(queries, qid, qtext, "bm25TopK")
     // ONE corpus tokenization, PRUNED BEFORE THE SHUFFLE: the literal
     // In() on the query-term set evaluates inside the exploded scan's
     // codegen stage, so the tf aggregation only ever shuffles rows
@@ -154,8 +164,7 @@ object Retrieval {
     // doc-grain join back against the corpus is needed. (A standing
     // query workload would materialize the unpruned tf as a bucketed
     // inverted index instead of re-scanning per call.)
-    val tf = pruneByTermSet(postings(docs, id, text), qrows.map(_.getString(1)),
-        qterms, col("term"))
+    val tf = pruneByTermSet(postings(docs, id, text), qt.terms, qt.frame, col("term"))
       .groupBy(col(id), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
     // corpus stats: one columnar agg scan (count + total tokens),
     // skipped entirely when the caller passes the known constants
@@ -165,7 +174,7 @@ object Retrieval {
       case None =>
         docs.agg(count(lit(1)).as("nd"), sum(size(tok)).as("tl"))
     }
-    scoreAndCut(tf, stats, id, qterms, qid, k, k1, b)
+    scoreAndCut(tf, stats, id, qt.frame, qid, k, k1, b)
   }
 
   /** The scoring tail both BM25 paths share: document frequency from
@@ -253,10 +262,9 @@ object Retrieval {
                           k: Int = 10, mu: Double = 2000.0): DataFrame = {
     require(k >= 1, s"queryLikelihoodTopK: k must be >= 1 (got $k)")
     require(mu > 0, s"queryLikelihoodTopK: mu must be > 0 (got $mu)")
-    val (qterms, qrows) =
-      collectedQueryTerms(queries, qid, qtext, "queryLikelihoodTopK")
-    val tf = pruneByTermSet(postings(docs, id, text), qrows.map(_.getString(1)),
-        qterms, col("term"))
+    val qt = collectedQueryTerms(queries, qid, qtext, "queryLikelihoodTopK")
+    val qterms = qt.frame
+    val tf = pruneByTermSet(postings(docs, id, text), qt.terms, qterms, col("term"))
       .groupBy(col(id), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
     val stats = docs.agg(count(lit(1)).as("nd"),
       sum(size(toks(col(text)))).as("tl"))
@@ -329,97 +337,119 @@ object Retrieval {
   }
 
   /** BM25 top-k against a MATERIALIZED [[invertedIndex]] — the
-    * standing-workload path: zero corpus scans per call. The term
-    * prune reaches the postings scan, whose (id, dl, term, tf) rows
-    * are a fraction of the raw text bytes and never re-tokenize. A
-    * query whose pruned postings fit [[PostingsCollectCap]] is scored
-    * on the driver after ONE capped collect and returns a local frame
-    * (see [[indexedTopK]]); a larger one scores lazily through the
-    * broadcast tail both BM25 paths share. Scores are bit-identical
-    * to [[bm25TopK]] (same tokenizer contract, same contribution
-    * expression, exact decimal sums). */
+    * standing-workload path: zero corpus scans per call. An index read
+    * as a parquet file scan within the driver's byte budget is loaded
+    * ONCE per file set ([[graft.sources.Resident]]) and each query is
+    * scored on the driver from those rows, with no Spark job; another
+    * index frame prunes to the query terms in its scan and is scored on
+    * the driver after ONE capped collect (see [[indexedTopK]]). Past
+    * the driver bounds the broadcast tail both BM25 paths share scores
+    * lazily. Scores are bit-identical to [[bm25TopK]] (same tokenizer
+    * contract, same contribution expression, exact decimal sums). */
   def bm25TopKIndexed(index: DataFrame, stats: (Long, Long), id: String,
                       queries: DataFrame, qid: String, qtext: String,
                       k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"bm25TopKIndexed: k must be >= 1 (got $k)")
     require(k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
-    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext, "bm25TopKIndexed")
-    indexedTopK(index, stats, id, qterms, qrows, qid, k, k1, b)
+    val qt = collectedQueryTerms(queries, qid, qtext, "bm25TopKIndexed")
+    indexedTopK(index, stats, id, qt, qid, k, k1, b)
   }
 
   /** Most pruned postings rows [[indexedTopK]] scores on the driver;
     * past it the broadcast tail [[scoreAndCut]] scores. */
   private val PostingsCollectCap = 100000
 
-  /** [[bm25TopKIndexed]] over already-collected query terms. A serving
-    * query's pruned postings are query-sized, so with at most
-    * [[TermInlineCap]] distinct terms, integral document ids and
-    * string or integral query ids the query is scored on the DRIVER:
-    * ONE job collects the pruned postings (each task stops after
-    * [[PostingsCollectCap]] + 1 rows), and the driver counts document
-    * frequencies, evaluates every posting's contribution with Spark's
-    * own expression over a local relation (no job), sums them per
-    * (query, document) exactly in decimal(38,18), rounds through
-    * Spark's `round` the same way, and cuts the top k. The result is a
-    * local frame, computed at call time. Past any of those bounds the
-    * broadcast tail [[scoreAndCut]] scores lazily (past the postings
-    * cap after the one capped job). Both paths sum the same decimal
-    * contributions, so scores are bit-identical. */
+  /** [[bm25TopKIndexed]] over already-collected query terms. With
+    * integral document ids and string or integral query ids, a query
+    * is scored on the DRIVER ([[driverTopK]]) from one of two row
+    * sources:
+    *  - the index's resident rows ([[graft.sources.Resident]]), when
+    *    it is a parquet file scan within the driver's byte budget and
+    *    `term` is a string column, filtered to the query terms on the
+    *    driver: no Spark job;
+    *  - otherwise, with at most [[TermInlineCap]] distinct terms, ONE
+    *    job collecting the pruned postings (each task stops after
+    *    [[PostingsCollectCap]] + 1 rows).
+    * The result is a local frame, computed at call time. Past
+    * [[PostingsCollectCap]] pruned postings, or any other bound, the
+    * broadcast tail [[scoreAndCut]] scores lazily. Both paths sum the
+    * same decimal contributions, so scores are bit-identical. */
   private def indexedTopK(index: DataFrame, stats: (Long, Long), id: String,
-                          qterms: DataFrame, qrows: Seq[Row], qid: String,
+                          qt: QueryTerms, qid: String,
                           k: Int, k1: Double, b: Double): DataFrame = {
     // literal In() so the term pruning reaches the postings parquet
     // scan as a PushedFilter — with the index term-clustered on write,
     // row-group min/max stats skip every non-matching group, where the
     // old broadcast semi-join decoded the full postings file per call
-    val terms = qrows.map(_.getString(1))
-    val tf = pruneByTermSet(index, terms, qterms, col("term"))
+    lazy val tf = pruneByTermSet(index, qt.terms, qt.frame, col("term"))
     def integral(t: DataType) = t match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    val qidType = qterms.schema(qid).dataType
-    val local =
-      if (terms.distinct.size > TermInlineCap || !integral(tf.schema(id).dataType) ||
+    val qidType = qt.schema(qid).dataType
+    // the postings columns the driver scores, in driverTopK's order
+    val cols = Seq(id, "dl", "tf", "term")
+    val rows =
+      if (!integral(index.schema(id).dataType) ||
           !(qidType == StringType || integral(qidType))) None
-      else driverTopK(tf, stats, id, qterms, qrows, qid, k, k1, b)
-    local.getOrElse {
+      else {
+        val stringTerms = index.schema.find(_.name == "term").exists(_.dataType == StringType)
+        (if (stringTerms) Resident.of(index, cols) else None) match {
+          case Some(all) =>
+            val wanted = qt.terms.toSet
+            Some(all.copy(rows = all.rows.filter(r => wanted.contains(r.getString(3)))))
+              .filter(_.rows.length <= PostingsCollectCap)
+          case None if qt.terms.distinct.size <= TermInlineCap =>
+            val sel = tf.select(cols.map(col): _*)
+            Sources.collectCapped(sel, PostingsCollectCap).map(Resident.Loaded(sel.schema, _))
+          case None => None
+        }
+      }
+    rows.map(driverTopK(index.sparkSession, _, stats, qt, qid, k, k1, b)).getOrElse {
       val statsDf = index.sparkSession.range(1)
         .select(lit(stats._1).as("nd"), lit(stats._2).as("tl"))
-      scoreAndCut(tf, statsDf, id, qterms, qid, k, k1, b)
+      scoreAndCut(tf, statsDf, id, qt.frame, qid, k, k1, b)
     }
   }
 
-  /** The driver path of [[indexedTopK]]; None past [[PostingsCollectCap]]
-    * pruned postings. */
-  private def driverTopK(tf: DataFrame, stats: (Long, Long), id: String,
-                         qterms: DataFrame, qrows: Seq[Row], qid: String,
-                         k: Int, k1: Double, b: Double): Option[DataFrame] = {
-    val spark = tf.sparkSession
-    val postings = tf.select(col(id), col("dl"), col("tf"), col("term"),
-      (col("tf") > 0).as("__pos"))
-    val rows = Sources.collectCapped(postings, PostingsCollectCap) match {
-      case Some(rs) => rs
-      case None => return None
+  /** Driver projections of Spark's own scoring expressions, bound once
+    * per input schema and parameters (see [[driverTopK]]). */
+  private val projections = new FileSets.Lru[(StructType, Seq[Any]), RowProjection](64)
+
+  private def bound(spark: SparkSession, in: StructType, params: Any*)(
+      cols: => Seq[Column]): RowProjection = {
+    // ANSI mode changes what a cast or an overflow evaluates to
+    val key = (in, spark.sessionState.conf.ansiEnabled +: params)
+    projections.get(key).getOrElse {
+      val p = new RowProjection(spark, in, cols); projections.put(key, p); p
     }
-    // document frequency: postings with tf > 0 per term, as scoreAndCut
-    // counts them
-    val dfc = rows.groupMapReduce(_.getString(3))(r =>
-      if (!r.isNullAt(4) && r.getBoolean(4)) 1L else 0L)(_ + _)
-    def localFrame(rs: Seq[Row], schema: StructType) =
-      spark.createDataFrame(rs.asJava, schema)
-    // each posting's contribution, evaluated by Spark over a local
-    // relation: the projection folds into it, so no job runs
-    val contribs = localFrame(
-        rows.toSeq.map(r => Row(r.get(0), r.get(1), r.get(2), dfc(r.getString(3)))),
-        StructType(postings.schema.fields.take(3) :+ StructField("dfc", LongType)))
-      .select(contribution(lit(stats._1), lit(stats._2), k1, b)
-        .cast("decimal(38,18)"))
-      .collect()
+  }
+
+  /** The driver scoring of [[indexedTopK]] over the pruned postings
+    * `(id, dl, tf, term)`: document frequencies counted on the driver
+    * (postings with `tf > 0` per term, as [[scoreAndCut]] counts them),
+    * every posting's contribution evaluated by Spark's own expression
+    * through a projection bound once per (k1, b, stats, schema), sums
+    * per (query, document) exact in decimal(38,18), rounded through
+    * Spark's `round` the same way, and the GroupedTopK cut. */
+  private def driverTopK(spark: SparkSession, postings: Resident.Loaded,
+                         stats: (Long, Long), qt: QueryTerms, qid: String,
+                         k: Int, k1: Double, b: Double): DataFrame = {
+    val in = postings.schema
+    val rows = postings.rows
+    val pos = bound(spark, in, "tf > 0")(Seq(col("tf") > 0))(rows.iterator)
+    val dfc = rows.iterator.zip(pos.iterator).toSeq.groupMapReduce(_._1.getString(3)) {
+      case (_, p) => if (!p.isNullAt(0) && p.getBoolean(0)) 1L else 0L
+    }(_ + _)
+    val contribs = bound(spark,
+        StructType(in.fields.take(3) :+ StructField("dfc", LongType)),
+        "contribution", k1, b, stats) {
+      Seq(contribution(lit(stats._1), lit(stats._2), k1, b).cast("decimal(38,18)"))
+    }(rows.iterator.map(r => Row(r.get(0), r.get(1), r.get(2), dfc(r.getString(3)))))
     // per (query, document): the exact decimal sum; a group whose every
     // contribution is NULL sums to NULL, as Spark's sum does
-    val qidsOf = qrows.groupMap(_.getString(1))(_.get(0))
+    val qidsOf = qt.rows.groupMap(_.getString(1))(_.get(0))
     val sums = scala.collection.mutable.LinkedHashMap
       .empty[(Any, Any), Option[java.math.BigDecimal]]
     rows.iterator.zip(contribs.iterator).foreach { case (r, c) =>
@@ -432,11 +462,11 @@ object Retrieval {
         }
       }
     }
-    val scored = localFrame(
-        sums.iterator.map { case ((q, doc), v) => Row(q, doc, v.orNull) }.toSeq,
-        StructType(Seq(qterms.schema(qid), postings.schema(id),
-          StructField("__sum", DecimalType(38, 18)))))
-      .select(col(qid), col(id), round(col("__sum").cast("double"), 6).as("bm25"))
+    val rounding = bound(spark, StructType(Seq(StructField("__sum", DecimalType(38, 18)))),
+      "round")(Seq(round(col("__sum").cast("double"), 6)))
+    val scores = rounding(sums.valuesIterator.map(v => Row(v.orNull)))
+    val scored = sums.keysIterator.zip(scores.iterator)
+      .map { case ((q, doc), s) => Row(q, doc, s.get(0)) }.toSeq
     // the GroupedTopK cut: bm25 desc nulls last, then id asc nulls first
     val order: Ordering[Row] = (x: Row, y: Row) => {
       val byScore = (x.isNullAt(2), y.isNullAt(2)) match {
@@ -454,9 +484,9 @@ object Retrieval {
           y.getAs[Number](1).longValue)
       }
     }
-    val top = scored.collect().toSeq.groupBy(_.get(0)).values
-      .flatMap(_.sorted(order).take(k)).toSeq
-    Some(localFrame(top, scored.schema))
+    val top = scored.groupBy(_.get(0)).values.flatMap(_.sorted(order).take(k)).toSeq
+    spark.createDataFrame(top.asJava, StructType(Seq(qt.schema(qid), in.fields(0),
+      StructField("bm25", DoubleType, rounding.schema.fields(0).nullable))))
   }
 
   /** RM3-style pseudo-relevance-feedback expansion (Lavrenko & Croft
@@ -469,8 +499,9 @@ object Retrieval {
     * the user didn't type (query "spark agg" can surface docs that
     * only say "aggregate") at the cost of one extra postings pass.
     *
-    * Scale shape: both passes are pruned-postings scans of the index
-    * (never the raw corpus); the feedback-doc join broadcasts the
+    * Scale shape: both passes score as [[bm25TopKIndexed]] does (from
+    * the index's resident rows, or pruned-postings scans of the index;
+    * never the raw corpus); the feedback-doc join broadcasts the
     * queries×fbDocs result list; feedback term ranking is
     * GroupedTopK's bounded heap. Everything after the index scans is
     * result-set-sized. Output: (qid, id, bm25) of the expanded pass. */
@@ -492,8 +523,8 @@ object Retrieval {
       .map(_.toInt).getOrElse(TermInlineCap * 64)
     require(k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKIndexed: need k1 > 0 and b in [0,1] (got k1=$k1, b=$b)")
-    val (qterms, qrows) = collectedQueryTerms(queries, qid, qtext, "bm25PrfTopK")
-    val first = indexedTopK(index, stats, id, qterms, qrows, qid, fbDocs, k1, b)
+    val qt = collectedQueryTerms(queries, qid, qtext, "bm25PrfTopK")
+    val first = indexedTopK(index, stats, id, qt, qid, fbDocs, k1, b)
     // The feedback-doc list is (queries × fbDocs)-sized: collect it
     // once and replay it as a LITERAL frame. Lazily, `expanded` fed
     // BOTH the pass-2 term set and the scoring join — two independent
@@ -522,23 +553,23 @@ object Retrieval {
     }
     val fb = fbScan.join(broadcast(firstFrame), Seq(id))
       .groupBy(col(qid), col("term")).agg(sum(col("tf")).as("__w"))
-      .join(qterms, Seq(qid, "term"), "left_anti")
+      .join(qt.frame, Seq(qid, "term"), "left_anti")
     val topFb = graft.plans.TopK.topKPerGroup(fb, Seq(qid),
         Seq(col("__w").desc, col("term").asc), fbTerms)
       .select(col(qid), col("term"))
-    val expanded = qterms.unionByName(topFb).distinct()
-    // collected once, the expansion's rows feed both the term prune and
-    // the scoring join; past the cap both read the lazy frame
-    val (expFrame, tf) = Sources.collectCapped(expanded, prfCap) match {
+    val expanded = qt.frame.unionByName(topFb).distinct()
+    // collected once, the expansion's rows are the second pass's query
+    // terms, scored as the first pass is; past the cap the lazy frame
+    // feeds both the term prune and the scoring join
+    Sources.collectCapped(expanded, prfCap) match {
       case Some(rows) =>
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), expanded.schema)
-        (local, pruneByTermSet(index, rows.map(_.getString(1)).toSeq, local, col("term")))
-      case None => (expanded, semiJoinTerms(index, expanded))
+        indexedTopK(index, stats, id, QueryTerms(spark, expanded.schema, rows.toSeq),
+          qid, k, k1, b)
+      case None =>
+        val statsDf = spark.range(1)
+          .select(lit(stats._1).as("nd"), lit(stats._2).as("tl"))
+        scoreAndCut(semiJoinTerms(index, expanded), statsDf, id, expanded, qid, k, k1, b)
     }
-    val statsDf = spark.range(1)
-      .select(lit(stats._1).as("nd"), lit(stats._2).as("tl"))
-    scoreAndCut(tf, statsDf, id, expFrame, qid, k, k1, b)
   }
 
   /** RAG context assembly — the end-to-end composition a

@@ -1270,10 +1270,11 @@ object Similarity {
     * residual encode, and PQ codebooks are built ONCE, and the query
     * batch is served by [[ivfPqServeJoin]]: probes and per-(query,
     * cell) LUTs are computed on the driver from the collected
-    * centroids and codebooks, and the corpus side is one scan of the
-    * probed cells joined to a broadcast local LUT frame, cut per query
-    * by the [[graft.plans.GroupedTopK]] operator (partial
-    * per-partition heaps, ONE k-bounded shuffle — no global sort).
+    * centroids and codebooks ([[ivfPqProbes]]), and the corpus side
+    * is one scan of the probed cells joined to a broadcast local LUT
+    * frame, cut per query by the [[graft.plans.GroupedTopK]] operator
+    * (partial per-partition heaps, ONE k-bounded shuffle — no global
+    * sort).
     * Envelope: the query batch is collected to the driver, so it must
     * be dimension-sized (the ivfTopKJoin contract: ≲ thousands of
     * queries); the LUT frame is |queries|·nProbe rows × m maps of ksub
@@ -1299,8 +1300,10 @@ object Similarity {
       s"ivfPqTopKJoin: nProbe=$nProbe must be in 1..$nLists")
     val (enc, centroids, _, cb) =
       ivfPqEncodeFrames(corpus, id, vec, dims, nLists, m, ksub, iters)
-    ivfPqServeJoin(enc, id, IvfPqModel(dims, m, centroidsOf(centroids), cb),
-      queries, qid, qvec, k, nProbe)
+    val model = IvfPqModel(dims, m, centroidsOf(centroids), cb)
+    val (queryField, probes) =
+      ivfPqProbes(model, queries, qid, qvec, nProbe, "ivfPqTopKJoin")
+    ivfPqServeJoin(enc, id, model.m, queryField, probes, k)
   }
 
   /** Coarse index + residual PQ encode, shared by the in-plan serve
@@ -1409,77 +1412,65 @@ object Similarity {
     }
   }
 
-  /** The query-batched IVFADC serve stage over an ALREADY-ENCODED
-    * corpus. On the driver: collect the query batch (a local frame
-    * collects without a job; more than
-    * [[graft.sources.Sources.QueryBatchCap]] rows fail loudly), rank
-    * each query's nProbe cells and build its per-(query, cell) LUTs
-    * with [[graft.plans.VectorKernels.l2]], the kernel `L2DistanceExpr`
-    * evaluates in-plan, so every value is bit-identical to the former
-    * in-plan probe window and LUT aggregation. The probed cells are
-    * read through an explicit `list_id IN (...)` filter, which on the
-    * [[ivfPqIndexWrite]] artifact (partitioned by list_id) is
-    * DIRECTORY pruning.
-    *
-    * With `driverCap` (the index path, [[ivfPqTopKJoinFromIndex]]),
-    * integral neighbor ids and string or integral query ids, ONE job
-    * collects the probed cells' codes (each task stops after
-    * `driverCap` + 1 rows) and [[ivfPqDriverTopK]] scores them on the
-    * driver into a local frame. Otherwise, or past the cap, the plan
-    * scores lazily: ONE scan of the probed cells joined to the
-    * broadcast local LUT frame, map-side ADC, then the GroupedTopK
-    * cut. [[ivfPqTopKJoin]] always takes the lazy plan: it is the
-    * reference the driver path is checked against. */
-  private def ivfPqServeJoin(enc: DataFrame, idCol: String, model: IvfPqModel,
-                             queries: DataFrame, qid: String, qvec: String,
-                             k: Int, nProbe: Int,
-                             driverCap: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
+  /** The query side of IVFADC serving, on the driver: collect the
+    * query batch (a local frame collects without a job; more than
+    * [[graft.sources.Sources.QueryBatchCap]] rows fail loudly, naming
+    * `op`), rank each query's nProbe cells and build its per-(query,
+    * cell) LUTs with [[graft.plans.VectorKernels.l2]], the kernel
+    * `L2DistanceExpr` evaluates in-plan, so every value is
+    * bit-identical to the former in-plan probe window and LUT
+    * aggregation. Returns the `query_id` field and the probes. */
+  private def ivfPqProbes(model: IvfPqModel, queries: DataFrame, qid: String,
+                          qvec: String, nProbe: Int, op: String):
+      (org.apache.spark.sql.types.StructField, Seq[IvfPqProbe]) = {
     val q = queries.select(col(qid).as("query_id"),
       col(qvec).cast("array<double>").as("__qv"))
     val probes = graft.sources.Sources.collectAtMost(q,
-        graft.sources.Sources.QueryBatchCap,
-        s"${if (driverCap.isEmpty) "ivfPqTopKJoin" else "ivfPqTopKJoinFromIndex"}: " +
-          "the query batch")
+        graft.sources.Sources.QueryBatchCap, s"$op: the query batch")
       .toSeq.flatMap { r =>
         val qv = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
         model.probe(qv, nProbe).map { case (listId, cell) =>
           IvfPqProbe(r.get(0), listId, model.luts(qv, cell))
         }
       }
-    val probedIds = probes.map(_.listId).distinct.sorted
-    val cells = enc.filter(col("list_id").isin(probedIds: _*))
-    def integral(t: DataType) = t match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val qidType = q.schema("query_id").dataType
-    val local = driverCap
-      .filter(_ => integral(enc.schema(idCol).dataType) &&
-        (qidType == StringType || integral(qidType)))
-      .flatMap(cap => ivfPqDriverTopK(cells, idCol, model.m, probes,
-        q.schema("query_id"), k, cap))
-    local.getOrElse {
-      val lutSchema = StructType(q.schema.fields.take(1) ++
-        (StructField("list_id", IntegerType, nullable = false) +:
-          (0 until model.m).map(s => StructField(s"__lut_$s",
-            MapType(LongType, DoubleType, valueContainsNull = true)))))
-      val luts = enc.sparkSession.createDataFrame(java.util.Arrays.asList(
-        probes.map(p => Row.fromSeq(p.queryId +: p.listId +: p.luts)): _*), lutSchema)
-      val adc = (0 until model.m)
-        .map(s => element_at(col(s"__lut_$s"), col(s"__code_$s")))
-        .reduce(_ + _)
-      val cand = cells.join(broadcast(luts), Seq("list_id"))
-        .select(col("query_id"), col(idCol).as("neighbor_id"), adc.as("adc"))
-      val cut = graft.plans.TopK.topKPerGroup(cand, Seq("query_id"),
-        Seq(col("adc").asc, col("neighbor_id")), k)
-      cut.withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("adc").asc, col("neighbor_id"))).cast("long"))
-        .select("query_id", "neighbor_id", "adc", "rank")
-    }
+    (q.schema("query_id"), probes)
+  }
+
+  /** The probed cells, sorted: the `list_id IN (...)` a scan of an
+    * ALREADY-ENCODED corpus filters on, which on the [[ivfPqIndexWrite]]
+    * artifact (partitioned by list_id) is DIRECTORY pruning. */
+  private def probedCells(probes: Seq[IvfPqProbe]): Seq[Int] =
+    probes.map(_.listId).distinct.sorted
+
+  /** The lazy IVFADC serve stage over an ALREADY-ENCODED corpus: ONE
+    * scan of the probed cells joined to the broadcast local LUT frame,
+    * map-side ADC, then the GroupedTopK cut. [[ivfPqTopKJoin]] always
+    * takes it: it is the reference the driver path
+    * ([[ivfPqDriverTopK]]) is checked against. */
+  private def ivfPqServeJoin(enc: DataFrame, idCol: String, m: Int,
+                             queryField: org.apache.spark.sql.types.StructField,
+                             probes: Seq[IvfPqProbe], k: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    val lutSchema = StructType(queryField +:
+      (StructField("list_id", IntegerType, nullable = false) +:
+        (0 until m).map(s => StructField(s"__lut_$s",
+          MapType(LongType, DoubleType, valueContainsNull = true)))))
+    val luts = enc.sparkSession.createDataFrame(java.util.Arrays.asList(
+      probes.map(p => Row.fromSeq(p.queryId +: p.listId +: p.luts)): _*), lutSchema)
+    val adc = (0 until m)
+      .map(s => element_at(col(s"__lut_$s"), col(s"__code_$s")))
+      .reduce(_ + _)
+    val cand = enc.filter(col("list_id").isin(probedCells(probes): _*))
+      .join(broadcast(luts), Seq("list_id"))
+      .select(col("query_id"), col(idCol).as("neighbor_id"), adc.as("adc"))
+    val cut = graft.plans.TopK.topKPerGroup(cand, Seq("query_id"),
+      Seq(col("adc").asc, col("neighbor_id")), k)
+    cut.withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("adc").asc, col("neighbor_id"))).cast("long"))
+      .select("query_id", "neighbor_id", "adc", "rank")
   }
 
   /** One query's probe of one cell: the m per-subspace LUTs
@@ -1492,59 +1483,57 @@ object Similarity {
     * scores. */
   private val ProbedRowsCap = 100000
 
-  /** The driver path of [[ivfPqServeJoin]]; None past `cap` code rows.
-    * Each (query, code row) of a probed cell scores as the plan scores
-    * it: the m LUT lookups added in subspace order, NULL when a lookup
-    * is NULL (a missing code or a null query vector), as Spark's `+`
+  /** The driver scoring of the probed cells' `(list_id, id,
+    * __code_0..m-1)` rows, bit-identical to [[ivfPqServeJoin]]. Each
+    * (query, code row) of a probed cell scores as the plan scores it:
+    * the m LUT lookups added in subspace order, NULL when a lookup is
+    * NULL (a missing code or a null query vector), as Spark's `+`
     * propagates it. Each query keeps its k first rows under the
     * GroupedTopK cut's order (adc ascending nulls first, then
     * neighbor_id ascending nulls last), and ranks them 1..k by the rank
     * window's order (neighbor_id nulls first). The result is a local
     * frame, computed at call time. */
-  private def ivfPqDriverTopK(cells: DataFrame, idCol: String, m: Int,
+  private def ivfPqDriverTopK(spark: org.apache.spark.sql.SparkSession,
+                              cells: graft.sources.Resident.Loaded, m: Int,
                               probes: Seq[IvfPqProbe],
                               queryField: org.apache.spark.sql.types.StructField,
-                              k: Int, cap: Int): Option[DataFrame] = {
+                              k: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     import org.apache.spark.sql.types._
-    val codes = cells.select(col("list_id") +: col(idCol) +:
-      (0 until m).map(s => col(s"__code_$s")): _*)
-    graft.sources.Sources.collectCapped(codes, cap).map { rows =>
-      type Cand = (Any, Any, java.lang.Double) // (query_id, neighbor_id, adc)
-      val byCell = probes.groupBy(_.listId)
-      val scored = rows.toSeq.flatMap { r =>
-        byCell.getOrElse(r.getInt(0), Nil).map { p =>
-          val adc = (0 until m).map { s =>
-            if (r.isNullAt(2 + s)) null else p.luts(s).getOrElse(r.getLong(2 + s), null)
-          }.reduce[java.lang.Double]((a, b) => if (a == null || b == null) null else a + b)
-          (p.queryId, r.get(1), adc): Cand
-        }
+    type Cand = (Any, Any, java.lang.Double) // (query_id, neighbor_id, adc)
+    val byCell = probes.groupBy(_.listId)
+    val scored = cells.rows.toSeq.flatMap { r =>
+      byCell.getOrElse(r.getInt(0), Nil).map { p =>
+        val adc = (0 until m).map { s =>
+          if (r.isNullAt(2 + s)) null else p.luts(s).getOrElse(r.getLong(2 + s), null)
+        }.reduce[java.lang.Double]((a, b) => if (a == null || b == null) null else a + b)
+        (p.queryId, r.get(1), adc): Cand
       }
-      def order(idNullsFirst: Boolean): Ordering[Cand] = (x: Cand, y: Cand) => {
-        val byAdc = (x._3, y._3) match {
-          case (null, null) => 0
-          case (null, _) => -1
-          case (_, null) => 1
-          case (a, b) => compareDoubles(a, b)
-        }
-        if (byAdc != 0) byAdc
-        else (x._2, y._2) match {
-          case (null, null) => 0
-          case (null, _) => if (idNullsFirst) -1 else 1
-          case (_, null) => if (idNullsFirst) 1 else -1
-          case (a: Number, b: Number) => java.lang.Long.compare(a.longValue, b.longValue)
-        }
-      }
-      val ranked = scored.groupBy(_._1).values.toSeq.flatMap { cs =>
-        cs.sorted(order(idNullsFirst = false)).take(k)
-          .sorted(order(idNullsFirst = true)).zipWithIndex
-          .map { case ((qv, id, adc), i) => Row(qv, id, adc, (i + 1).toLong) }
-      }
-      cells.sparkSession.createDataFrame(java.util.Arrays.asList(ranked: _*),
-        StructType(Seq(queryField, cells.schema(idCol).copy(name = "neighbor_id"),
-          StructField("adc", DoubleType), StructField("rank", LongType, nullable = false))))
     }
+    def order(idNullsFirst: Boolean): Ordering[Cand] = (x: Cand, y: Cand) => {
+      val byAdc = (x._3, y._3) match {
+        case (null, null) => 0
+        case (null, _) => -1
+        case (_, null) => 1
+        case (a, b) => compareDoubles(a, b)
+      }
+      if (byAdc != 0) byAdc
+      else (x._2, y._2) match {
+        case (null, null) => 0
+        case (null, _) => if (idNullsFirst) -1 else 1
+        case (_, null) => if (idNullsFirst) 1 else -1
+        case (a: Number, b: Number) => java.lang.Long.compare(a.longValue, b.longValue)
+      }
+    }
+    val ranked = scored.groupBy(_._1).values.toSeq.flatMap { cs =>
+      cs.sorted(order(idNullsFirst = false)).take(k)
+        .sorted(order(idNullsFirst = true)).zipWithIndex
+        .map { case ((qv, id, adc), i) => Row(qv, id, adc, (i + 1).toLong) }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(ranked: _*),
+      StructType(Seq(queryField, cells.schema(1).copy(name = "neighbor_id"),
+        StructField("adc", DoubleType), StructField("rank", LongType, nullable = false))))
   }
 
   /** Materialize an IVF-PQ index as a warehouse artifact — the 100 TB
@@ -1644,15 +1633,21 @@ object Similarity {
 
   /** Serve a query batch from the materialized index: the centroid and
     * codebook sidecars are loaded to the driver once per index file
-    * set, probes and LUTs are computed on the driver, and the codes
-    * table — its schema resolved once per file set by
-    * [[graft.sources.Sources.readParquet]] — is scanned ONLY in the
-    * probed list_id partitions (directory pruning; the spec asserts
-    * the partition filter reaches the scan). When the probed cells
-    * hold at most [[ProbedRowsCap]] code rows, that scan is ONE capped
-    * collect and the driver scores the ADC and cuts the top k
-    * ([[ivfPqServeJoin]]), returning a local frame: a warm call runs
-    * one Spark job. Past the cap the broadcast LUT join scores lazily.
+    * set, probes and LUTs are computed on the driver
+    * ([[ivfPqProbes]]). With integral neighbor ids and string or
+    * integral query ids, the probed cells' code rows are scored on the
+    * driver ([[ivfPqDriverTopK]]), from one of two row sources:
+    *  - the codes table's resident rows ([[graft.sources.Resident]]),
+    *    loaded once per codes file set within the driver's byte budget
+    *    and filtered to the probed cells on the driver: a warm call
+    *    builds no relation and runs no Spark job;
+    *  - otherwise ONE capped collect of the codes table — its schema
+    *    resolved once per file set by
+    *    [[graft.sources.Sources.readParquet]] — scanned ONLY in the
+    *    probed list_id partitions (directory pruning; the spec asserts
+    *    the partition filter reaches the scan).
+    * The result is then a local frame. Past [[ProbedRowsCap]] probed
+    * rows the broadcast LUT join ([[ivfPqServeJoin]]) scores lazily.
     * The query batch is collected to the driver, so it must be
     * dimension-sized. Results are bit-identical to [[ivfPqTopKJoin]]
     * over the same corpus and parameters. */
@@ -1666,9 +1661,36 @@ object Similarity {
                                           path: String, queries: DataFrame,
                                           qid: String, qvec: String, k: Int,
                                           nProbe: Int, cap: Int): DataFrame = {
+    import graft.sources.{Resident, Sources}
+    import org.apache.spark.sql.types._
     val ix = ivfPqIndexAt(spark, path)
-    val enc = graft.sources.Sources.readParquet(spark, s"$path/codes")
-    ivfPqServeJoin(enc, ix.idCol, ix.model, queries, qid, qvec, k, nProbe, Some(cap))
+    val m = ix.model.m
+    val (queryField, probes) =
+      ivfPqProbes(ix.model, queries, qid, qvec, nProbe, "ivfPqTopKJoinFromIndex")
+    val cells = probedCells(probes)
+    val cols = "list_id" +: ix.idCol +: (0 until m).map(s => s"__code_$s")
+    val codes = Resident.at(spark, s"$path/codes", cols)
+    def integral(t: DataType) = t match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    val idType = codes.fold(_.schema(ix.idCol), _.schema(1)).dataType
+    val rows =
+      if (!integral(idType) ||
+          !(queryField.dataType == StringType || integral(queryField.dataType))) None
+      else codes match {
+        case Right(all) =>
+          val probed = cells.toSet
+          Some(all.copy(rows = all.rows.filter(r => !r.isNullAt(0) && probed(r.getInt(0)))))
+            .filter(_.rows.length <= cap)
+        case Left(enc) =>
+          val sel = enc.filter(col("list_id").isin(cells: _*)).select(cols.map(col): _*)
+          Sources.collectCapped(sel, cap).map(Resident.Loaded(sel.schema, _))
+      }
+    rows.map(ivfPqDriverTopK(spark, _, m, probes, queryField, k)).getOrElse {
+      val enc = codes.fold(identity, _ => Sources.readParquet(spark, s"$path/codes"))
+      ivfPqServeJoin(enc, ix.idCol, m, queryField, probes, k)
+    }
   }
 
   // ---- KNN-Shapley data valuation -------------------------------------------

@@ -50,7 +50,7 @@ private[graft] object FileSets {
     new java.util.WeakHashMap[Lru[_, _], java.lang.Boolean])
 
   /** Empty every driver-side cache of file-derived state (parquet
-    * schemas, IVF-PQ index sidecars, FileBloom sidecars): the next
+    * schemas, IVF-PQ index sidecars, [[Resident]] artifact rows): the next
     * read loads or infers again, as the first one did. Benchmarks call
     * this between timed runs. */
   def clearCaches(): Unit =
@@ -60,12 +60,15 @@ private[graft] object FileSets {
     * at most `bound` entries and at most `maxWeight` of summed
     * `weight` (the least recently used go first; an entry heavier than
     * `maxWeight` on its own is not kept, and evicts nothing). Every
-    * instance is emptied by [[clearCaches]]. */
+    * instance is emptied by [[clearCaches]]; [[evictions]] counts the
+    * entries that went to make room. */
   final class Lru[K, V](bound: Int, maxWeight: Long = Long.MaxValue,
                         weight: V => Long = (_: V) => 0L) {
     private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
     private var total = 0L
+    private var evicted = 0L
     caches.synchronized(caches.add(this))
+    def evictions: Long = m.synchronized(evicted)
     def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
     def put(k: K, v: V): Unit = m.synchronized {
       Option(m.remove(k)).foreach(old => total -= weight(old))
@@ -75,7 +78,7 @@ private[graft] object FileSets {
         // `k` is now the most recently used, so it is never the one to go
         val eldest = m.values.iterator
         while (m.size > bound || total > maxWeight) {
-          total -= weight(eldest.next()); eldest.remove()
+          total -= weight(eldest.next()); eldest.remove(); evicted += 1
         }
       }
     }

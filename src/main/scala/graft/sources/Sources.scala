@@ -104,6 +104,21 @@ object Sources {
     }
   }
 
+  /** The schema [[readParquet]] gives `paths` when their file set is
+    * `files`, if it is cached: no relation is built. */
+  private[graft] def cachedSchema(spark: SparkSession, paths: Seq[String],
+                                  files: Vector[(String, Long, Long)]): Option[StructType] =
+    schemas.get(SchemaKey(paths, merged = false,
+      InferenceConfs.map(spark.conf.getOption), files))
+
+  /** The schema of [[readParquet]]`(paths)`: from the schema cache
+    * when the file set is unchanged, so a hit builds no relation. A
+    * missing path fails the way Spark fails. */
+  private[graft] def parquetSchema(spark: SparkSession, paths: String*): StructType =
+    FileSets.fingerprint(spark.sessionState.newHadoopConf(), paths)
+      .flatMap(cachedSchema(spark, paths, _))
+      .getOrElse(readParquet(spark, paths: _*).schema)
+
   /** A non-merged read whose roots are all plain data files (a
     * manifested table's file list) has no partition columns, and
     * Spark infers its schema from the FIRST file's footer alone; read

@@ -3104,7 +3104,8 @@ class OpsSpec extends SparkTestBase {
       nLists = 6, m = 4, ksub = 4, iters = 1, path = full)
     // serve-from-artifact is bit-identical to the in-plan chain; the
     // executed plans of the queries it runs are captured for the
-    // directory-pruning check below
+    // directory-pruning check below. A resident load reads every
+    // partition, so the check runs on the per-call path (no byte budget)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
@@ -3115,9 +3116,10 @@ class OpsSpec extends SparkTestBase {
                              e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
+    def serve() = Similarity.ivfPqTopKJoinFromIndex(spark, full,
+      e.filter(col("vec_id") < 3), "vec_id", "embedding", k = 8, nProbe = 1)
     val fromIdx =
-      try Similarity.ivfPqTopKJoinFromIndex(spark, full,
-        e.filter(col("vec_id") < 3), "vec_id", "embedding", k = 8, nProbe = 1)
+      try graft.sources.Resident.withBudget(0L)(serve())
       finally {
         org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         spark.listenerManager.unregister(listener)
@@ -3138,6 +3140,15 @@ class OpsSpec extends SparkTestBase {
     assert(codeScans.nonEmpty, s"no scan of the codes table ran:\n$plans")
     codeScans.foreach(plan => assert(plan.contains("PartitionFilters: [list_id"),
       s"probe filter must prune list_id directories:\n${plan.take(2000)}"))
+    // within the budget the codes load ONCE per file set: the next
+    // call is served from memory, with the same answer
+    val c0 = graft.sources.Resident.counts
+    assert(rows(serve()) == rows(inPlan))
+    val c1 = graft.sources.Resident.counts
+    assert(rows(serve()) == rows(inPlan))
+    val c2 = graft.sources.Resident.counts
+    assert(c1.loads == c0.loads + 1 && c2.loads == c1.loads && c2.hits == c1.hits + 1,
+      s"one resident load per file set: $c0 -> $c1 -> $c2")
     // day-2: index trained on evens, odds appended against the STORED
     // centroids/codebooks == one-shot encode of everything with the
     // same even-trained artifacts

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.ops.{FileBloomIndex, Retrieval, Similarity}
-import graft.sources.Sources
+import graft.sources.{Resident, Sources}
 import graft.streaming.ManifestSink
 
 /** Open-once serving state: parquet schemas resolved once per file
@@ -54,8 +54,19 @@ class ServingCacheSpec extends SparkTestBase {
   }
 
   test("readParquet: a missing path still fails the way Spark fails") {
+    val missing = s"${tmp("graft_schema_missing")}/nope"
     intercept[org.apache.spark.sql.AnalysisException] {
-      Sources.readParquet(spark, s"${tmp("graft_schema_missing")}/nope")
+      Sources.readParquet(spark, missing)
+    }
+    // lookupMany takes the data schema from the schema cache, and fails
+    // the same way on a missing data path
+    import spark.implicits._
+    val data = s"${tmp("graft_schema_lookup")}/d"
+    (0L until 100L).map(i => (i, i * 2L)).toDF("k", "v").write.parquet(data)
+    val side = spark.read.parquet(FileBloomIndex.writeSidecar(spark, data, col("k"), 100L))
+    assert(Sources.parquetSchema(spark, data) == spark.read.parquet(data).schema)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      FileBloomIndex.lookupMany(spark, missing, side, col("k"), Seq(1L))
     }
   }
 
@@ -141,19 +152,120 @@ class ServingCacheSpec extends SparkTestBase {
     // k = 100 is more than the whole 80-row corpus, so more than any
     // query's candidates
     Seq(5, 100).foreach { k =>
-      val driver = served(k, 100000)
-      assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
-        "within the cap the answer is a local frame")
+      val before = Resident.counts
+      val resident = served(k, 100000)
+      val after = Resident.counts
+      assert(after.hits + after.loads == before.hits + before.loads + 1 &&
+        after.overBudget == before.overBudget, s"the codes must be resident: $before -> $after")
+      // with no byte budget the probed cells are collected per call
+      val perCall = Resident.withBudget(0L)(served(k, 100000))
+      assert(Resident.counts.overBudget == after.overBudget + 1)
       val want = bits(inPlan(k))
       assert(want.exists(_._3.isEmpty) && want.exists(_._3.nonEmpty))
-      assert(bits(driver) == want, s"k=$k: driver path != ivfPqTopKJoin")
-      // past the cap the broadcast join scores, with the same answer
-      val pastCap = served(k, 3)
-      assert(!pastCap.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-      assert(bits(pastCap) == want, s"k=$k: past-cap path != ivfPqTopKJoin")
+      Seq("resident" -> resident, "per-call" -> perCall).foreach { case (how, driver) =>
+        assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+          s"$how: within the cap the answer is a local frame")
+        assert(bits(driver) == want, s"k=$k: $how driver path != ivfPqTopKJoin")
+      }
+      // past the cap the broadcast join scores, with the same answer,
+      // from either row source
+      Seq(served(k, 3), Resident.withBudget(0L)(served(k, 3))).foreach { pastCap =>
+        assert(!pastCap.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        assert(bits(pastCap) == want, s"k=$k: past-cap path != ivfPqTopKJoin")
+      }
     }
     val ties = bits(inPlan(100)).groupBy(r => (r._1, r._3)).values.filter(_.size > 1)
     assert(ties.nonEmpty, "the duplicated vectors must tie on adc")
+  }
+
+  test("bm25TopKIndexed: resident, per-call and past-cap answers are bit-identical to bm25TopK") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import spark.implicits._
+    val docs = (1 to 200).map(i =>
+      (i.toLong, Seq.fill(i % 5 + 1)(s"w${i % 11}").mkString(" ") + " common"))
+      .toDF("doc_id", "text")
+    val postings = s"${tmp("graft_bm25_resident")}/postings"
+    Retrieval.invertedIndex(docs, "doc_id", "text").write.parquet(postings)
+    val stats = Retrieval.corpusStatsOf(docs, "text")
+    // query "a" twice: its (query, term) rows repeat; "c" matches nothing
+    val qs = Seq(("a", "w3 common"), ("b", "w5 w7"), ("a", "w3"), ("c", "nothing"))
+      .toDF("q_id", "qtext")
+    def bits(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).sorted.toSeq
+    def indexed(queries: DataFrame, k: Int) = Retrieval.bm25TopKIndexed(
+      spark.read.parquet(postings), stats, "doc_id", queries, "q_id", "qtext", k = k)
+    // k = 500 is more than the whole 200-document corpus
+    Seq(4, 500).foreach { k =>
+      val want = bits(Retrieval.bm25TopK(docs, "doc_id", "text", qs, "q_id", "qtext", k = k))
+      val before = Resident.counts
+      val resident = indexed(qs, k)
+      val after = Resident.counts
+      assert(after.hits + after.loads == before.hits + before.loads + 1 &&
+        after.overBudget == before.overBudget, s"the postings must be resident: $before -> $after")
+      // with no byte budget the pruned postings are collected per call
+      val perCall = Resident.withBudget(0L)(indexed(qs, k))
+      assert(Resident.counts.overBudget == after.overBudget + 1)
+      Seq("resident" -> resident, "per-call" -> perCall).foreach { case (how, df) =>
+        assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation], how)
+        assert(bits(df) == want, s"k=$k: $how != bm25TopK")
+      }
+    }
+    // more distinct terms than the per-call path inlines: with no byte
+    // budget the broadcast tail scores; resident rows still score on
+    // the driver
+    val wide = qs.union(Seq(("w", (0 until 1100).map(i => s"x$i").mkString(" ") + " w4"))
+      .toDF("q_id", "qtext"))
+    val want = bits(Retrieval.bm25TopK(docs, "doc_id", "text", wide, "q_id", "qtext", k = 4))
+    val pastCap = Resident.withBudget(0L)(indexed(wide, 4))
+    assert(!pastCap.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(bits(pastCap) == want, "past-cap path != bm25TopK")
+    assert(bits(indexed(wide, 4)) == want, "resident path with many terms != bm25TopK")
+  }
+
+  test("resident artifacts follow postings rewritten in place, an IVF-PQ append and clearCaches") {
+    import spark.implicits._
+    val dir = tmp("graft_resident_stale")
+    val postings = s"$dir/postings"
+    val qs = Seq(("q", "alpha beta")).toDF("q_id", "qtext")
+    def index(docs: DataFrame) = {
+      Retrieval.invertedIndex(docs, "doc_id", "text").write.mode("overwrite").parquet(postings)
+      Retrieval.corpusStatsOf(docs, "text")
+    }
+    def ranked(df: DataFrame) = df.collect().map(r => (r.getLong(1), r.getDouble(2))).sorted.toSeq
+    def served(stats: (Long, Long)) = ranked(Retrieval.bm25TopKIndexed(
+      spark.read.parquet(postings), stats, "doc_id", qs, "q_id", "qtext", k = 3))
+    def direct(docs: DataFrame) =
+      ranked(Retrieval.bm25TopK(docs, "doc_id", "text", qs, "q_id", "qtext", k = 3))
+    val v1 = Seq((1L, "alpha x"), (2L, "beta y"), (3L, "gamma")).toDF("doc_id", "text")
+    val v2 = Seq((1L, "gamma"), (4L, "alpha beta"), (5L, "beta beta")).toDF("doc_id", "text")
+    val s1 = index(v1)
+    assert(served(s1) == direct(v1))
+    val hits = Resident.counts.hits
+    assert(served(s1) == direct(v1))
+    assert(Resident.counts.hits == hits + 1, "a repeat query must be served from memory")
+    val loads = Resident.counts.loads
+    val s2 = index(v2)
+    assert(served(s2) == direct(v2), "postings rewritten at the same path must be served")
+    assert(Resident.counts.loads == loads + 1)
+
+    val e = embeddings(41)
+    val ivf = s"$dir/ivf"
+    Similarity.ivfPqIndexWrite(e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      dims = 16, nLists = 6, m = 4, ksub = 4, iters = 1, path = ivf)
+    def ivfServe() = rows(Similarity.ivfPqTopKJoinFromIndex(spark, ivf,
+      e.filter(col("vec_id") < 3), "vec_id", "embedding", k = 8, nProbe = 2))
+    val evens = ivfServe()
+    assert(ivfServe() == evens)
+    Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 2 === 1), "embedding", ivf)
+    val appended = ivfServe()
+    assert(appended != evens && appended.exists(r => r._1 == 1L && r._2 == 1L),
+      "the appended codes must be served")
+    assert(appended == Resident.withBudget(0L)(ivfServe()))
+
+    val cleared = Resident.counts.loads
+    graft.sources.FileSets.clearCaches()
+    assert(ivfServe() == appended && served(s2) == direct(v2))
+    assert(Resident.counts.loads == cleared + 2, "a cleared cache must load again")
   }
 
   test("job budgets: ivfPqTopKJoinFromIndex <= 1, lookupMany <= 1 past the sidecar read") {
@@ -167,9 +279,22 @@ class ServingCacheSpec extends SparkTestBase {
       "vec_id", "embedding", k = 5, nProbe = 2).collect()
     ivf()
     val ivfJobs = jobsDuring(ivf())
-    assert(ivfJobs <= 1, s"warm IVF-PQ serve + collect: $ivfJobs jobs")
+    assert(ivfJobs == 0, s"warm IVF-PQ serve + collect: $ivfJobs jobs")
 
     import spark.implicits._
+    val docs = (1 to 50).map(i => (i.toLong, s"w${i % 7} common")).toDF("doc_id", "text")
+    val postings = s"${tmp("graft_bm25_budget")}/postings"
+    Retrieval.invertedIndex(docs, "doc_id", "text").write.parquet(postings)
+    val stats = Retrieval.corpusStatsOf(docs, "text")
+    val qs = Seq(("a", "w3 common"), ("b", "w5")).toDF("q_id", "qtext")
+    def bm25() = Retrieval.bm25TopKIndexed(spark.read.parquet(postings), stats, "doc_id",
+      qs, "q_id", "qtext", k = 5).collect()
+    bm25()
+    val readJobs = jobsDuring(spark.read.parquet(postings))
+    val bm25Jobs = jobsDuring(bm25())
+    assert(bm25Jobs <= readJobs,
+      s"warm bm25TopKIndexed + collect: $bm25Jobs jobs, $readJobs for the postings read")
+
     val data = s"${tmp("graft_fbloom_budget")}/d"
     (0L until 2000L).map(i => (i, i * 3L)).toDF("k", "v")
       .repartition(8, col("k")).write.parquet(data)
