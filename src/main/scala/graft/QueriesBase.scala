@@ -366,12 +366,11 @@ object QueriesBase {
     // sorted-zipWithIndex forms (no single-partition window anywhere —
     // see PlanSpec's global-window assert)
     "b_rank_u" -> ((s, d) => {
-      // project first: the rowid sorts carry the full row through the
-      // zipWithIndex passes
+      // project first: the rowid sort carries the full row through the
+      // zipWithIndex pass; all three ranks come from that one pass
       val base = t(s, d, "part").select("p_partkey", "p_size")
-      val r1 = SeqFns.withRankAvg(base, col("p_size"), "rk_avg")
-      val r2 = SeqFns.withRankMin(r1, col("p_size"), "rk_min")
-      SeqFns.withOrderIndex(r2, col("p_size"), Seq(col("p_partkey")), "ord_idx")
+      SeqFns.withRanks(base, col("p_size"), Seq(col("p_partkey")),
+          Some("ord_idx"), Some("rk_min"), Some("rk_avg"))
         .select("p_partkey", "rk_avg", "rk_min", "ord_idx")
         .orderBy(col("p_partkey"))
     }),

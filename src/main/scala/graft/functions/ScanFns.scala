@@ -146,7 +146,7 @@ object ScanFns {
     val tmp = freshTempNames(df, "__sx", n)
     val inCols = df.columns.map(df.col) ++
       ops.zipWithIndex.map { case ((x, _, _), i) => x.cast("double").as(tmp(i)) }
-    val sorted = df.select(inCols.toIndexedSeq: _*).orderBy(order: _*)
+    val sorted = rangeSorted(df.select(inCols.toIndexedSeq: _*), order)
     val xi = Array.tabulate(n)(i => sorted.schema.fieldIndex(tmp(i)))
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
     val kernels = ops.map(_._2).toArray
@@ -238,6 +238,15 @@ object ScanFns {
     rdd
   }
 
+  /** `df` range-partitioned and sorted on `order`, asked for
+    * explicitly: the scans read the sort's partitions as their own, so
+    * they need range partitions — each pass runs one task per
+    * partition. A global `orderBy` may instead be gathered into one
+    * partition (graft.plans.GatherSmallSortStrategy), which would put
+    * both passes on one task. */
+  private def rangeSorted(df: DataFrame, order: Seq[Column]): DataFrame =
+    df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+
   /** The sorted plan's CATALYST rows, copied (toRdd reuses buffers) and
     * persisted for the scan's two passes. Staying on InternalRow end to
     * end — compact UnsafeRow bytes in the cache, no boxed external Rows
@@ -278,7 +287,7 @@ object ScanFns {
     val tmp = freshTempNames(df, "__ck", n)
     val inCols = df.columns.map(df.col) ++
       keys.zipWithIndex.map { case (k, i) => k.as(tmp(i)) }
-    val sorted = df.select(inCols.toIndexedSeq: _*).orderBy(order: _*)
+    val sorted = rangeSorted(df.select(inCols.toIndexedSeq: _*), order)
     val ki = Array.tabulate(n)(i => sorted.schema.fieldIndex(tmp(i)))
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
     // catalyst key values: UTF8String/Long/... — equality and driver
@@ -367,7 +376,7 @@ object ScanFns {
     val tmp = freshTempNames(df, "__rx", n)
     val inCols = df.columns.map(df.col) ++
       specs.zipWithIndex.map { case ((x, _, _), i) => x.cast("double").as(tmp(i)) }
-    val sorted = df.select(inCols.toIndexedSeq: _*).orderBy(order: _*)
+    val sorted = rangeSorted(df.select(inCols.toIndexedSeq: _*), order)
     val xi = Array.tabulate(n)(i => sorted.schema.fieldIndex(tmp(i)))
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
     val kinds = specs.map(_._2).toArray
@@ -468,9 +477,9 @@ object ScanFns {
     requireFreshNames(df, specs.map(_._3))
     val nSpec = specs.length
     val tmp = freshTempNames(df, "__sh", nSpec)
-    val sorted = df.select((df.columns.map(df.col) ++
-        specs.zipWithIndex.map { case ((x, _, _), j) => x.as(tmp(j)) }).toIndexedSeq: _*)
-      .orderBy(order: _*)
+    val sorted = rangeSorted(df.select((df.columns.map(df.col) ++
+        specs.zipWithIndex.map { case ((x, _, _), j) => x.as(tmp(j)) }).toIndexedSeq: _*),
+      order)
     val w = sorted.schema.length
     val base = w - nSpec
     val vi = Array.tabulate(nSpec)(j => sorted.schema.fieldIndex(tmp(j)))
@@ -588,7 +597,7 @@ object ScanFns {
                    storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     require(order.nonEmpty, "ungrouped fill needs a declared total order")
     require(cols.nonEmpty, "fill: no columns selected")
-    val sorted = df.orderBy(order: _*)
+    val sorted = rangeSorted(df, order)
     val idxs = cols.map(sorted.schema.fieldIndex).toArray
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
     val rdd = sortedInternal(sorted, storage)

@@ -85,32 +85,44 @@ object SeqFns {
 
   // ---- ungrouped rank family, scale-safe ---------------------------------
   // A whole-frame rank needs a total order; the scale-safe way to get
-  // one in Spark is a range-partitioned sort + per-partition offsets
-  // (zipWithIndex) — the same pattern as tibble::rowid_to_column
-  // (core/Tibble.scala). Tie-group stats then come from a window
-  // partitioned BY VALUE (many partitions), never by ().
+  // one in Spark is a sort + per-partition offsets (zipWithIndex) —
+  // the same pattern as tibble::rowid_to_column (core/Tibble.scala).
+  // Tie-group stats then come from a window partitioned BY VALUE (many
+  // partitions), never by ().
+
+  /** base::order, base::rank(ties="min") and base::rank(ties="average")
+    * of `x` over the whole frame from ONE rowid pass: the rowid under
+    * the `x`-ascending, `tie`-broken total order is the order index,
+    * the smallest rowid of x's tie group is its min-rank (whatever
+    * breaks the ties), and the average rank adds half the tie-group
+    * span (double, like R). One sort and one by-value window serve all
+    * three; an output whose name is None is not added. */
+  def withRanks(df: DataFrame, x: Column, tie: Seq[Column], orderIndex: Option[String],
+                rankMin: Option[String], rankAvg: Option[String]): DataFrame = {
+    val rowid = orderIndex.getOrElse("__grn")
+    val ties = Window.partitionBy(x)
+    val rkMin = min(col(rowid)).over(ties)
+    val ranked = graft.core.Tibble.rowidToColumn(df, x.asc +: tie, rowid)
+    val out = rankMin.map(_ -> rkMin).toSeq ++
+      rankAvg.map(_ -> (rkMin + (count(lit(1)).over(ties) - 1) / 2.0))
+    val all = out.foldLeft(ranked) { case (d, (name, c)) => d.withColumn(name, c) }
+    if (orderIndex.isEmpty) all.drop(rowid) else all
+  }
 
   /** base::order over the whole frame: global permutation index. */
   def withOrderIndex(df: DataFrame, x: Column, tie: Seq[Column],
                      as: String): DataFrame =
-    graft.core.Tibble.rowidToColumn(df, x.asc +: tie, as)
+    withRanks(df, x, tie, Some(as), None, None)
 
   /** base::rank(ties="min") over the whole frame: rank(v) = min rowid
     * of v's tie group under the x-ascending total order. */
   def withRankMin(df: DataFrame, x: Column, as: String): DataFrame =
-    graft.core.Tibble.rowidToColumn(df, Seq(x.asc), "__grn")
-      .withColumn(as, min(col("__grn")).over(Window.partitionBy(x)))
-      .drop("__grn")
+    withRanks(df, x, Nil, None, Some(as), None)
 
   /** base::rank(ties="average") over the whole frame: min-rank plus
     * half the tie-group span (double, like R). */
-  def withRankAvg(df: DataFrame, x: Column, as: String): DataFrame = {
-    val ties = Window.partitionBy(x)
-    graft.core.Tibble.rowidToColumn(df, Seq(x.asc), "__grn")
-      .withColumn(as,
-        min(col("__grn")).over(ties) + (count(lit(1)).over(ties) - 1) / 2.0)
-      .drop("__grn")
-  }
+  def withRankAvg(df: DataFrame, x: Column, as: String): DataFrame =
+    withRanks(df, x, Nil, None, None, Some(as))
 
   /** Average rank of `x` WITHIN each `key` group — the grouped twin of
     * [[withRankAvg]], built WITHOUT a partition-by-key window: a

@@ -3,14 +3,20 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Registers graft's native kernel expressions as SQL functions, so
   * `spark.sql("SELECT minhash_signature(text, 3, 64) ...")` works for
-  * SQL-first users.
+  * SQL-first users, and graft's planner strategies
+  * ([[GroupedTopKStrategy]], [[GatherSmallSortStrategy]]).
   *
-  * Two entry points:
+  * Entry points:
   * - cluster config: `spark.sql.extensions=graft.plans.GraftExtensions`
-  * - runtime: `GraftExtensions.register(spark)` on an existing session
+  *   (functions and strategies)
+  * - runtime: `GraftExtensions.register(spark)` (functions) and
+  *   `GraftExtensions.install(spark)` (strategies) on an existing
+  *   session; `Sources.readParquet` and `TopK.topKPerGroup` call
+  *   `install`
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -18,7 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectPlannerStrategy(_ => GroupedTopKStrategy)
+    strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
@@ -106,6 +112,20 @@ object GraftExtensions {
           s"hilbert_key: n*bits must be in 1..63 (got ${cols.size}*$bits)")
         HilbertIndexExpr(CreateArray(cols.map(Cast(_, LongType))), bits)
       }))
+
+  private[plans] val strategies: Seq[SparkStrategy] =
+    Seq(GroupedTopKStrategy, GatherSmallSortStrategy)
+
+  /** Appends graft's planner strategies to the session's
+    * `experimental.extraStrategies`; idempotent, so every graft entry
+    * point may call it. */
+  def install(spark: SparkSession): Unit = {
+    val exp = spark.experimental
+    if (!strategies.forall(exp.extraStrategies.contains)) exp.synchronized {
+      exp.extraStrategies =
+        exp.extraStrategies ++ strategies.filterNot(exp.extraStrategies.contains)
+    }
+  }
 
   /** Runtime registration into an existing session's function registry. */
   def register(spark: SparkSession): Unit =

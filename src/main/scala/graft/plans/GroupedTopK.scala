@@ -34,8 +34,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * memory, use the window form).
   *
   * Registered by [[GraftExtensions]] (config
-  * `spark.sql.extensions=graft.plans.GraftExtensions`) or injected at
-  * runtime by [[TopK.topKPerGroup]].
+  * `spark.sql.extensions=graft.plans.GraftExtensions`) or installed at
+  * runtime by [[GraftExtensions.install]], which
+  * [[TopK.topKPerGroup]] calls.
   */
 case class GroupedTopK(groupExprs: Seq[Expression], order: Seq[SortOrder],
                        k: Int, child: LogicalPlan) extends UnaryNode {

@@ -19,12 +19,7 @@ object TopK {
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
                    orderCols: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    // idempotent runtime injection; cluster deployments register via
-    // spark.sql.extensions=graft.plans.GraftExtensions instead
-    if (!spark.experimental.extraStrategies.contains(GroupedTopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupedTopKStrategy
-    }
+    GraftExtensions.install(spark)
     val order = orderCols.map(c => ColumnBridge.catalystExpr(c) match {
       case so: CatSortOrder => so
       case e => CatSortOrder(e, Ascending, NullsLast, Seq.empty)

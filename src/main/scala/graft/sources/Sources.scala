@@ -84,6 +84,9 @@ object Sources {
 
   private def readParquetCached(spark: SparkSession, paths: Seq[String],
                                 merged: Boolean): DataFrame = {
+    // every graft pipeline starts at a parquet read: its session plans
+    // with graft's strategies from here on
+    graft.plans.GraftExtensions.install(spark)
     def inferred =
       (if (merged) spark.read.option("mergeSchema", "true") else spark.read)
         .parquet(paths: _*)
